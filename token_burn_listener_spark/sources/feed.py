@@ -7,14 +7,23 @@ contract — poll(cursor) → (new events, next cursor) — is EXACTLY the
 ``SimpleDataSourceStreamReader`` interface, so the parity slice gets a real
 custom source instead of only the built-in file replay:
 
-- **Batch reader** (`format("event_feed")`): splits the JSONL feed into
-  contiguous line-range ``InputPartition``s — the full-backfill path, read
-  in parallel.
+- **Batch reader** (`format("event_feed")`): splits each JSONL part into
+  byte ranges whose edges are moved forward to the next newline — the
+  full-backfill path, read in parallel.
 - **Streaming reader** (`readStream.format("event_feed")`): the offset IS
-  the listener's cursor (`{"pos": n}` = lines delivered so far);
-  ``rows_per_batch`` bounds each poll exactly like A10's rate limit;
-  ``readBetweenOffsets`` replays a committed range verbatim after restart
-  (A8/A9 exactly-once semantics).
+  the listener's cursor, ``{"part": <part file name>, "byte": <next unread
+  byte>, "pos": <rows delivered>}``. Parts are append-only and published
+  atomically, so a byte offset into a named part is stable: a poll seeks
+  there and reads at most ``rows_per_batch`` whole lines (A10's rate
+  limit), never the prefix before it. ``readBetweenOffsets`` replays a
+  committed byte range verbatim after restart (A8/A9 exactly-once
+  semantics). A checkpoint holding the older line-count offset
+  ``{"pos": n}`` cannot resume and is rejected with an error.
+
+Both readers parse with one helper: ``pyarrow.json.read_json`` under the
+explicit ``FEED_SCHEMA`` (a missing key reads as null, an extra key is
+ignored), returning ``pyarrow.RecordBatch``es that Spark takes without a
+per-row conversion.
 
 Python-in-the-scan-path note: a custom source IS the ingest boundary (the
 reference's RPC client was JavaScript for the same reason) — UDF policy
@@ -31,10 +40,14 @@ parsing drift between writer and reader).
 from __future__ import annotations
 
 import glob
+import io
 import json
 import os
 import re
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.json as pa_json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.datasource import (
@@ -53,7 +66,21 @@ from token_burn_listener_spark.tables import load_table
 FEED_SCHEMA = (
     "event_id long, ts_us long, user_id long, event_type string, value double"
 )
-_COLS = ("event_id", "ts_us", "user_id", "event_type", "value")
+_ARROW_SCHEMA = pa.schema(
+    [
+        ("event_id", pa.int64()),
+        ("ts_us", pa.int64()),
+        ("user_id", pa.int64()),
+        ("event_type", pa.string()),
+        ("value", pa.float64()),
+    ]
+)
+_COLS = tuple(_ARROW_SCHEMA.names)
+_PARSE_OPTIONS = pa_json.ParseOptions(
+    explicit_schema=_ARROW_SCHEMA, unexpected_field_behavior="ignore"
+)
+# Bytes read per step while a poll looks for its last line.
+_READ_BLOCK = 1 << 20
 
 
 def _feed_files(path: str) -> list[str]:
@@ -78,31 +105,74 @@ def _feed_files(path: str) -> list[str]:
     return sorted(glob.glob(os.path.join(path, "part-*")))
 
 
-def _feed_lines(path: str):
-    """Global line iterator over the feed's sorted part files.
+def _parse(chunks: list[bytes]) -> pa.Table:
+    """Byte chunks of whole JSON lines as one ``FEED_SCHEMA`` table.
 
-    The streaming cursor contract: parts are APPEND-ONLY in sorted-name
-    order (a provider feed grows by new part files, never by rewriting old
-    ones), so the global line index is a stable total order — positions
-    committed before a new part arrived still point at the same lines.
+    A chunk may end in a part's final line without a newline, so one is
+    added before the next chunk. The semantics are those of ``json.loads``
+    then ``rec.get(c)`` per column: a missing key is null, an extra key is
+    ignored, an integer literal in ``value`` reads as that double, and
+    doubles parse bit-exactly. Blank lines hold no row. One block covers
+    the whole input, so no line can straddle a block edge.
     """
-    for file in _feed_files(path):
-        with open(file) as f:
-            yield from f
+    data = b"".join(c if c.endswith(b"\n") else c + b"\n" for c in chunks)
+    if not data.strip():
+        return _ARROW_SCHEMA.empty_table()
+    return pa_json.read_json(
+        io.BytesIO(data),
+        read_options=pa_json.ReadOptions(
+            use_threads=False, block_size=min(len(data), 1 << 30)
+        ),
+        parse_options=_PARSE_OPTIONS,
+    ).select(list(_COLS))
 
 
-def _parse(line: str) -> tuple:
-    rec = json.loads(line)
-    return tuple(rec.get(c) for c in _COLS)
+def _read_range(file: str, start: int, end: int) -> bytes:
+    with open(file, "rb") as f:
+        f.seek(start)
+        return f.read(end - start)
 
 
-class _LineRange(InputPartition):
+def _take_lines(file: str, start: int, limit: int) -> tuple[bytes, int]:
+    """Up to ``limit`` whole lines of ``file`` from byte ``start``: their
+    bytes and their count. A final line without a newline counts, since a
+    part is published whole."""
+    out: list[bytes] = []
+    n = 0
+    with open(file, "rb") as f:
+        f.seek(start)
+        while n < limit:
+            buf = f.read(_READ_BLOCK)
+            if not buf:
+                if out and not out[-1].endswith(b"\n"):
+                    n += 1
+                break
+            need, k = limit - n, buf.count(b"\n")
+            if k >= need:  # cut after the need-th newline
+                nl = np.flatnonzero(np.frombuffer(buf, np.uint8) == ord("\n"))
+                out.append(buf[: nl[need - 1] + 1])
+                n = limit
+            else:
+                out.append(buf)
+                n += k
+    return b"".join(out), n
+
+
+def _line_start(f, pos: int) -> int:
+    """The first byte at or after ``pos`` that begins a line of ``f``."""
+    if pos == 0:
+        return 0
+    f.seek(pos - 1)
+    return pos - 1 + len(f.readline())
+
+
+class _ByteRange(InputPartition):
     def __init__(self, file: str, start: int, end: int):
         self.file, self.start, self.end = file, start, end
 
 
 class _FeedBatchReader(DataSourceReader):
-    """Backfill: per-file contiguous line ranges read in parallel (A2)."""
+    """Backfill: per-part byte ranges of whole lines, read in parallel (A2)."""
 
     def __init__(self, options):
         self.path = options["path"]
@@ -111,53 +181,93 @@ class _FeedBatchReader(DataSourceReader):
     def partitions(self):
         out = []
         for file in _feed_files(self.path):
-            with open(file) as f:
-                n = sum(1 for _ in f)
-            step = max(1, -(-n // self.n_splits))
-            out.extend(
-                _LineRange(file, i, min(i + step, n)) for i in range(0, n, step)
-            )
+            size = os.path.getsize(file)
+            step = max(1, -(-size // self.n_splits))
+            with open(file, "rb") as f:
+                edges = sorted(
+                    {_line_start(f, i) for i in range(0, size, step)} | {size}
+                )
+            out.extend(_ByteRange(file, a, b) for a, b in zip(edges, edges[1:]))
         return out
 
-    def read(self, partition: _LineRange):
+    def read(self, partition: _ByteRange):
         if partition is None:  # fenced EMPTY feed: partitions() was []
             return
-        with open(partition.file) as f:
-            for i, line in enumerate(f):
-                if i >= partition.end:
-                    break
-                if i >= partition.start:
-                    yield _parse(line)
+        data = _read_range(partition.file, partition.start, partition.end)
+        yield from _parse([data]).to_batches()
+
+
+def _offset(part: str, byte: int, pos: int) -> dict:
+    return {"part": part, "byte": byte, "pos": pos}
+
+
+def _cursor(offset: dict) -> tuple[str, int, int]:
+    """``(part, byte, pos)`` of a stream offset, or an error naming the
+    expected shape (a line-count ``{"pos": n}`` offset cannot resume)."""
+    if set(offset) != {"part", "byte", "pos"}:
+        raise ValueError(
+            f"event_feed offset {json.dumps(offset)} is not a byte cursor "
+            '{"part": <part file name>, "byte": <next unread byte>, '
+            '"pos": <rows delivered>}; a checkpoint holding line-count '
+            'offsets {"pos": n} cannot resume — start from a new checkpoint'
+        )
+    return offset["part"], offset["byte"], offset["pos"]
 
 
 class _FeedStreamReader(SimpleDataSourceStreamReader):
-    """The listener's poll loop: offset = {"pos": lines delivered so far}."""
+    """The listener's poll loop: offset = ``{"part", "byte", "pos"}``, the
+    next unread byte of a named part plus the rows delivered so far."""
 
     def __init__(self, options):
         self.path = options["path"]
         self.rows_per_batch = int(options.get("rows_per_batch", "2500"))
 
     def initialOffset(self):
-        return {"pos": 0}
+        return _offset("", 0, 0)
 
     def read(self, start):
-        pos = start["pos"]
-        out = []
-        for i, line in enumerate(_feed_lines(self.path)):
-            if i < pos:
+        part, byte, pos = _cursor(start)
+        chunks, n = [], 0
+        for file in _feed_files(self.path):
+            name = os.path.basename(file)
+            if name < part:  # already delivered: never reopened
                 continue
-            if len(out) >= self.rows_per_batch:
+            if n >= self.rows_per_batch:
                 break
-            out.append(_parse(line))
-        return iter(out), {"pos": pos + len(out)}
+            first = byte if name == part else 0
+            data, k = _take_lines(file, first, self.rows_per_batch - n)
+            if data:
+                chunks.append(data)
+                n += k
+                part, byte = name, first + len(data)
+        if not chunks:
+            return iter([]), start
+        table = _parse(chunks)
+        return iter(table.to_batches()), _offset(part, byte, pos + table.num_rows)
 
     def readBetweenOffsets(self, start, end):
-        # Restart replay (A8/A9): deliver the committed range verbatim.
-        for i, line in enumerate(_feed_lines(self.path)):
-            if i >= end["pos"]:
-                break
-            if i >= start["pos"]:
-                yield _parse(line)
+        # Restart replay (A8/A9): deliver the committed byte range verbatim.
+        s_part, s_byte, s_pos = _cursor(start)
+        e_part, e_byte, e_pos = _cursor(end)
+        chunks = []
+        for file in _feed_files(self.path):
+            name = os.path.basename(file)
+            if s_part <= name <= e_part:
+                chunks.append(
+                    _read_range(
+                        file,
+                        s_byte if name == s_part else 0,
+                        e_byte if name == e_part else os.path.getsize(file),
+                    )
+                )
+        table = _parse(chunks)
+        if table.num_rows != e_pos - s_pos:
+            raise ValueError(
+                f"event_feed replay of {json.dumps(start)} .. {json.dumps(end)}"
+                f" parsed {table.num_rows} rows, expected {e_pos - s_pos}: a"
+                " committed part changed after it was delivered"
+            )
+        return iter(table.to_batches())
 
 
 class _FeedCommit(WriterCommitMessage):
@@ -197,17 +307,18 @@ class _FeedWriter(DataSourceWriter):
         # r12 review: honor the save mode. Append publishes AFTER the
         # existing parts (previously every commit numbered from 0,
         # silently renaming over an earlier commit's files AND breaking
-        # _feed_lines' append-only cursor contract); overwrite removes
-        # the old parts at publish time.
+        # the stream reader's append-only cursor contract); overwrite
+        # removes the old parts at publish time.
         #
         # r13 (ADVICE r12): the cursor contract is LEXICOGRAPHIC
         # sorted-name order, so the next index derives from the
         # lexicographically-LAST part — a numeric max over mixed-width
         # names (part-000.json vs part-00002.jsonl) could publish a new
-        # part that sorts BEFORE an old one, silently shifting committed
-        # cursor positions. Mixed widths are rejected outright, and a new
-        # part whose padded index would overflow the feed's established
-        # width (sorting before part-999...) fails loudly too.
+        # part that sorts BEFORE an old one, which a committed cursor
+        # already past that name would never read. Mixed widths are
+        # rejected outright, and a new part whose padded index would
+        # overflow the feed's established width (sorting before
+        # part-999...) fails loudly too.
         existing = sorted(glob.glob(os.path.join(self.path, "part-*")))
         if self.overwrite:
             for p in existing:
@@ -326,9 +437,9 @@ _FEED_ORACLE_ROWS = """
 @query("q_src_python_batch", oracle=_FEED_ORACLE_ROWS)
 def q_src_python_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1/A2 parity: full backfill through the custom Python batch source —
-    every event row, read via parallel line-range partitions, value-exact
-    against the parquet-backed oracle (JSON double round-trip is
-    shortest-repr exact)."""
+    every event row, read via parallel newline-aligned byte-range
+    partitions, value-exact against the parquet-backed oracle (JSON double
+    round-trip is shortest-repr exact)."""
     register_feed_source(spark)
     path = ensure_feed(spark, sf_dir)
     return spark.read.format("event_feed").option("path", path).load()
@@ -450,9 +561,9 @@ def q_stream_listener_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB plan: the source is the ingest boundary (Kafka/cloud-log JVM
     connectors at scale — this proves the offset/commit contract); the
-    decode/filter is map-only relational; the sink's per-epoch overwrite
-    directories are the standard idempotent foreachBatch shape, so a
-    replayed epoch lands on the same path instead of duplicating.
+    decode/filter is map-only relational; the sink's per-epoch file,
+    replaced by an atomic rename, is the idempotent foreachBatch shape, so
+    a replayed epoch lands on the same path instead of duplicating.
     """
     import shutil
 

@@ -551,7 +551,7 @@ def q_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A7: idempotent upsert sink via foreachBatch.
 
-    Each batch overwrites its own ``batch=<id>`` dir, so redelivery of a
+    Each batch replaces its own ``batch=<id>`` file, so redelivery of a
     batch (simulated twice here: a restart with no new data, then a manual
     re-application of batch 0) leaves the target unchanged — the
     idempotent-MERGE the listener needed against its external store.

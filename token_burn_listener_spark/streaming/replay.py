@@ -11,11 +11,18 @@ backfill, dedup-on-redelivery, an external upsert sink, and a resume cursor
   NOT fault-tolerant: it cannot resume from a checkpoint, which is why the
   restart-based keys use foreachBatch instead.
 - **foreachBatch exactly-once upsert sink** (A7/A8/A9 analog) — each
-  micro-batch is written to ``target/batch=<epoch_id>`` with
-  mode('overwrite'): a retried or restarted batch rewrites the same dir,
-  so the target holds every batch exactly once no matter how many times
-  delivery is attempted. This is the idempotent-MERGE pattern the listener
-  needed against Backendless, re-expressed as a file-system upsert.
+  micro-batch is collected to the driver as one Arrow table
+  (``toArrow()``, a single Spark job), written with pyarrow to a
+  ``_``-prefixed temp file in ``target/batch=<epoch_id>/`` and renamed
+  onto that dir's fixed ``part-00000.parquet``. A retried or restarted
+  batch replaces the same file, so the target holds every batch exactly
+  once no matter how many times delivery is attempted, and a reader never
+  sees a half-written file (Spark's file listing skips ``_`` names). This
+  is the idempotent-MERGE pattern the listener needed against
+  Backendless, re-expressed as a file-system upsert. The write is
+  driver-side, bounded by the source's per-batch rate limit
+  (``rows_per_batch``); at scale it is still MERGE-on-key into the
+  external store, fenced by batch id.
 
 Scale notes (100 TB): the replay dir stands in for Kafka/cloud-log sources;
 ``maxFilesPerTrigger``/``maxOffsetsPerTrigger`` bound per-batch work (A10).
@@ -26,8 +33,10 @@ State stores default to HDFS-backed here; RocksDB is the at-scale option
 from __future__ import annotations
 
 from collections.abc import Callable
+import os
 import uuid
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 from token_burn_listener_spark.scratch import fresh_run_dir, materialize, scratch_dir
@@ -130,10 +139,16 @@ def run_to_memory(
 
 
 def batch_upsert_writer(target: str) -> Callable[[DataFrame, int], None]:
-    """foreachBatch function performing an idempotent per-batch upsert."""
+    """foreachBatch function performing an idempotent per-batch upsert:
+    the batch's rows replace ``target/batch=<id>/part-00000.parquet``
+    atomically, so a replayed batch id lands on the same file."""
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(f"{target}/batch={batch_id}")
+        out = f"{target}/batch={batch_id}"
+        os.makedirs(out, exist_ok=True)
+        tmp = os.path.join(out, f"_{uuid.uuid4().hex}.parquet")
+        pq.write_table(batch_df.toArrow(), tmp)
+        os.replace(tmp, os.path.join(out, "part-00000.parquet"))
 
     return upsert
 
