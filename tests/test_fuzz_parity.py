@@ -23,7 +23,7 @@ rules:
   (r6: pareto; r7: the cosine family, the recall denominator, two TPC-H
   shares, and the corr builtin).
 
-Fuzz census — the 21 registered keys NOT in any corpus, with reasons
+Fuzz census — the 20 registered keys NOT in any corpus, with reasons
 (all other keys ride a suite; test_fuzz_census_accounts_for_every_key
 below machine-checks this arithmetic so the census cannot drift):
 
@@ -52,13 +52,13 @@ below machine-checks this arithmetic so the census cannot drift):
   phase split needs >= 4 block heights, i.e. event_id >= 300; the
   chain walk itself is fuzzed via q_evt_chain_reorg), outer_join
   (rows-only: outer-null EMISSION TIMING is the semantics under test).
-- 11 rows-only keys (q_agg_approx_distinct, q_agg_approx_percentile,
+- 10 rows-only keys (q_agg_approx_distinct, q_agg_approx_percentile,
   q_agg_hll_union, q_hash_xxhash, q_llm_ann_lsh, q_llm_frames,
-  q_llm_multimodal, q_llm_near_dedup, q_llm_simhash, q_llm_tfidf,
-  q_scan_binaryfile): no DuckDB oracle by design (sketch/LSH/binary
-  output has no cross-engine twin), so _run_both has nothing to
-  compare; each carries an exact-oracle twin or bound test that IS
-  fuzzed or asserted (hll ≤2% bound, lsh/ann recall gates).
+  q_llm_multimodal, q_llm_simhash, q_llm_tfidf, q_scan_binaryfile): no
+  DuckDB oracle by design (sketch/LSH/binary output has no cross-engine
+  twin), so _run_both has nothing to compare; each carries an
+  exact-oracle twin or bound test that IS fuzzed or asserted (hll ≤2%
+  bound, lsh/ann recall gates).
 - q_llm_media_decode: oracle-checked, but its input is the in-key
   synthesized PPM/WAV binary corpus (closed-form pixels/samples) —
   there is no table input to randomize; parser exactness is pinned vs
@@ -893,7 +893,6 @@ _CENSUS_ROWS_ONLY = {
     "q_llm_ann_lsh",
     "q_llm_frames",
     "q_llm_multimodal",
-    "q_llm_near_dedup",
     "q_llm_simhash",
     "q_llm_tfidf",
     "q_scan_binaryfile",

@@ -1,9 +1,11 @@
 """B10 LLM-operator checks that the SQL oracle cannot express.
 
-The two LSH keys are rows-only in the driver (bucketing is engine-specific),
-so their quality bar lives here: candidate pairs must be real near-dups
-(precision vs exact Jaccard) and must find the known high-similarity pairs
-(recall); the ANN neighbors must overlap the exact kNN answer.
+The oracles check each key against a DuckDB twin of the same algorithm;
+these tests hold the algorithms to quality bars against independent
+references: the steep MinHash-LSH key must return only real near-dups
+with their exact Jaccard (precision vs a brute-force array_union
+reference) and find the known high-similarity pairs (recall); the ANN
+neighbors must overlap the exact kNN answer.
 """
 
 from __future__ import annotations
@@ -32,22 +34,25 @@ def exact_jaccard_pairs(spark, sf_dir, threshold: float):
     )
 
 
-def test_near_dedup_precision_and_recall(spark, sf_dir):
-    found = QUERIES["q_llm_near_dedup"](spark, sf_dir).select("doc_a", "doc_b")
-    # precision: every LSH pair is a true pair at the join threshold (the
-    # framework computes exact distance on candidates, so this is exact)
-    truth_at_threshold = exact_jaccard_pairs(spark, sf_dir, 0.4).select(
-        "doc_a", "doc_b"
-    )
-    false_pos = found.exceptAll(truth_at_threshold).count()
+def test_minhash_steep_precision_and_recall(spark, sf_dir):
+    found = QUERIES["q_llm_minhash_steep"](spark, sf_dir).localCheckpoint()
+    truth = exact_jaccard_pairs(spark, sf_dir, 0.4).localCheckpoint()
+    pairs = ["doc_a", "doc_b"]
+    # precision: every LSH pair is a true pair at the verify threshold,
+    # reported with the reference's Jaccard to 6 places
+    false_pos = found.select(*pairs).exceptAll(truth.select(*pairs)).count()
     assert false_pos == 0, f"{false_pos} pairs below the Jaccard threshold"
-    # recall on the strong pairs (J >= 0.8): OR-amplified MinHash at 6
-    # tables virtually cannot miss these
-    strong = exact_jaccard_pairs(spark, sf_dir, 0.8).select("doc_a", "doc_b")
+    ref = truth.select(*pairs, F.round("jaccard", 6).alias("ref"))
+    off = found.join(ref, pairs).filter(F.col("jaccard") != F.col("ref"))
+    n_off = off.count()
+    assert n_off == 0, f"{n_off} pairs differ from the reference Jaccard"
+    # recall on the strong pairs (J >= 0.8): 6 bands x 3 rows catch a
+    # J = 0.8 pair with probability 1-(1-0.8^3)^6 ≈ 0.987
+    strong = truth.filter(F.col("jaccard") >= 0.8).select(*pairs)
     n_strong = strong.count()
-    if n_strong:
-        missed = strong.exceptAll(found).count()
-        assert missed / n_strong <= 0.2, f"missed {missed}/{n_strong} strong pairs"
+    assert n_strong > 0, "fixture lost its planted near-duplicate pairs"
+    missed = strong.exceptAll(found.select(*pairs)).count()
+    assert missed / n_strong <= 0.2, f"missed {missed}/{n_strong} strong pairs"
 
 
 def test_ann_lsh_recall_vs_exact_knn(spark, sf_dir):

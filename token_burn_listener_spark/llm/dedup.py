@@ -6,14 +6,19 @@ Two tiers, matching how a 100 TB training-data pipeline actually dedups:
   64-hex-char sha256 key, partial+final agg, deterministic survivor
   (min doc_id). At 100 TB this is the cheap first pass — the hash key is
   tiny and uniformly distributed, so no skew.
-- **Near**: MinHash-LSH banding over character 5-gram shingles. Shingle →
-  hashed binary feature vector → ``numHashTables`` OR-amplified MinHash
-  signatures; ``approxSimilarityJoin`` joins only within matching signature
-  buckets (a shuffle on hash values), then computes EXACT Jaccard distance
-  on the candidate pairs. No O(n²) crossJoin anywhere — candidate
-  generation is the LSH bucket join, which is the at-scale path
-  (SURVEY.md §7.4). Seeded for determinism; recall vs exact Jaccard is
-  asserted in tests/test_llm.py.
+- **Near**: MinHash-LSH over character 5-gram shingles, ONE relational
+  path whose keys are configurations of it. ``_minhash_sigs`` builds the
+  signature table from deterministic sha256 windows (bit-identical to the
+  DuckDB oracles); ``_band_candidates`` AND-bands it in one self-join;
+  ``_jaccard_verify`` checks every candidate with exact shingle Jaccard
+  through ``_jaccard_at_least``, the core the brute-force oracle twin
+  ``exact_pair_grid`` shares. Configurations: q_llm_minhash_exact (4×2
+  bands), q_llm_minhash_steep (6×3, the production shape),
+  q_llm_minhash_bucketed (6×3 over a doc_id-bucketed layout) and
+  q_llm_lsh_recall (the 4×2 recall audit). No O(n²) crossJoin on the LSH
+  path — candidate generation is the band join, which is the at-scale
+  path (SURVEY.md §7.4). Every key is oracle-exact; recall vs exact
+  Jaccard is checked in-query by q_llm_lsh_recall and in tests/test_llm.py.
 """
 
 from __future__ import annotations
@@ -84,58 +89,6 @@ def q_llm_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("q_llm_near_dedup")  # rows-only: LSH bucketing is engine-specific;
-# recall vs exact Jaccard is asserted in tests/test_llm.py
-# r6 note — "fold a recall column into this key" (VERDICT r5 #6) was
-# considered and declined: the rows-only driver check records row count +
-# schema, never values, so an embedded recall column adds NO
-# driver-checkable signal — it would only churn a driver-proven schema.
-# The recall signal lives where the driver CAN check it: the exact-oracle
-# twins q_llm_lsh_recall (this file, deterministic 4x2 banding) and
-# q_llm_ann_recall (similarity.py), both in the r06 driver window.
-def q_llm_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-duplicate pairs via seeded MinHash-LSH over 5-gram shingles.
-
-    Pipeline: shingle → HashingTF (binary, 2^18 features) → MinHashLSH
-    (seed 42, 6 tables) → approxSimilarityJoin at Jaccard distance ≤ 0.6.
-    The join emits each candidate pair once per matching bucket, deduped by
-    the framework, with the exact Jaccard distance of the hashed feature
-    sets as distCol.
-
-    SCALE ROLE (measured, r11): this key is the ml-lib API-PARITY
-    demonstration, fixture-scale by design — approxSimilarityJoin can
-    only OR-amplify (each hash table is a 1-row band), so on a corpus
-    with real-crawl background similarity (J_bg ≈ 0.01, the r11 entropy
-    probe corpus) its candidate set is ≈ 1-(1-J)^6 ≈ 5.8% of ALL pairs —
-    structurally quadratic; the ×30 probe was killed straggler-bound
-    after 75 min while q_llm_minhash_exact's 4-band×2-row AND-banding
-    (P_band = 4·J² ≈ 4e-4, ~150× more selective) finished the identical
-    corpus in 264 s (SCALE.md r11). AND-banding is not expressible
-    through the ml operator's API; the production 100 TB path is
-    q_llm_minhash_exact's relational banded form.
-    """
-    from pyspark.ml.feature import HashingTF, MinHashLSH
-
-    d = shingled(load_table(spark, sf_dir, "documents"))
-    tf = HashingTF(
-        inputCol="sh", outputCol="features", numFeatures=1 << 18, binary=True
-    )
-    feats = tf.transform(d)
-    lsh = MinHashLSH(
-        inputCol="features", outputCol="hashes", seed=42, numHashTables=6
-    )
-    model = lsh.fit(feats)
-    pairs = model.approxSimilarityJoin(feats, feats, 0.6, distCol="jaccard_dist")
-    return (
-        pairs.filter(F.col("datasetA.doc_id") < F.col("datasetB.doc_id"))
-        .select(
-            F.col("datasetA.doc_id").alias("doc_a"),
-            F.col("datasetB.doc_id").alias("doc_b"),
-            F.round("jaccard_dist", 6).alias("jaccard_dist"),
-        )
-    )
-
-
 @query(
     "q_llm_jaccard_pairs",
     oracle="""
@@ -170,19 +123,20 @@ def q_llm_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_llm_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact shingle-Jaccard near-dup pairs (extra, beyond §2.B10).
 
-    The ORACLE for what q_llm_near_dedup approximates: brute-force pairwise
-    Jaccard ≥ 0.4 over 5-gram shingles. O(n²) by design at fixture scale
-    (SURVEY.md §7.4 exception); the MinHash-LSH key is the 100 TB path.
-    The threshold filter runs on the unrounded ratio — an exact rational of
-    two ints, bit-identical across engines.
+    The ORACLE for what the MinHash-LSH keys approximate: brute-force
+    pairwise Jaccard ≥ 0.4 over 5-gram shingles. O(n²) by design at
+    fixture scale (SURVEY.md §7.4 exception); q_llm_minhash_steep is the
+    100 TB path. The threshold filter runs on the unrounded ratio — an
+    exact rational of two ints, bit-identical across engines.
     """
     d = shingled(load_table(spark, sf_dir, "documents"))
-    return exact_pair_grid(d).select(
+    return exact_pair_grid(_encoded(d)).select(
         "doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard")
     )
 
 
 _JACCARD_T = 0.4  # near-dup threshold shared by all exact-pair consumers
+_ID_ENCODE = "transform(sh, s -> xxhash64(s))"  # shingle strings → ids
 
 
 def exact_pair_grid(
@@ -190,62 +144,123 @@ def exact_pair_grid(
     a_name: str = "doc_a",
     b_name: str = "doc_b",
     sample_mod: int | None = None,
-    encoded: bool = False,
 ) -> DataFrame:
     """Exact shingle-Jaccard ≥ _JACCARD_T pairs over the brute-force grid
-    (the documented fixture-scale oracle twin of the LSH path). Input needs
-    (doc_id, sh); output is (a_name, b_name, jaccard) with the UNROUNDED
-    exact rational. ``sample_mod`` keeps only pairs whose smaller id ≡ 0
-    (mod m) — the deterministic pair sample the recall audit counts.
-
-    Three exactness-preserving prunes/cuts:
-    - length prefilter: J(A,B) ≥ t ⇒ min(|A|,|B|)/max(|A|,|B|) ≥ t, so
-      mismatched-size pairs skip the intersect entirely;
-    - |A∪B| = |A|+|B|-|A∩B| (sh is distinct): one array_intersect per
-      pair is the only array op; same exact rational as intersect/union;
-    - (r14) the intersect runs over xxhash64 shingle ids when the encode
-      is proven exact for this corpus (_shingle_ids' checked
-      injectivity; string fallback otherwise). ``encoded=True`` tells
-      the grid its input is ALREADY id-encoded (q_llm_lsh_recall shares
-      one encode between the grid and its banded verify).
+    (the documented fixture-scale oracle twin of the LSH path). Input is
+    (doc_id, sh) — string shingles or the ids of ``_encoded``; output is
+    (a_name, b_name, jaccard) with the UNROUNDED exact rational.
+    ``sample_mod`` keeps only pairs whose smaller id ≡ 0 (mod m) — the
+    deterministic pair sample the recall audit counts.
     """
-    if not encoded:
-        ids = _shingle_ids(d)
-        if ids is not None:
-            d = ids
     left = d.filter(F.col("doc_id") % sample_mod == 0) if sample_mod else d
     a = left.select(F.col("doc_id").alias(a_name), F.col("sh").alias("_sa"))
     b = d.select(F.col("doc_id").alias(b_name), F.col("sh").alias("_sb"))
-    ratio = F.least(F.size("_sa"), F.size("_sb")) / F.greatest(
-        F.size("_sa"), F.size("_sb")
+    return _jaccard_at_least(
+        a.crossJoin(b).filter(F.col(a_name) < F.col(b_name)), a_name, b_name
     )
+
+
+def _jaccard_at_least(pairs: DataFrame, a: str, b: str) -> DataFrame:
+    """(a, b, jaccard) for the rows of ``pairs`` — id columns ``a``/``b``
+    plus the distinct shingle arrays ``_sa``/``_sb`` — whose exact
+    shingle Jaccard is ≥ _JACCARD_T; ``jaccard`` is the UNROUNDED exact
+    rational. The one exact-Jaccard core: the brute-force grid, the LSH
+    verify and the recall audit all call it. Three value-identical cuts:
+
+    - length prefilter: J(A,B) ≤ min(|A|,|B|)/max(|A|,|B|), and correctly
+      rounded IEEE division is monotone, so a pair whose computed min/max
+      is < t cannot have a computed J ≥ t — it skips the intersect;
+    - |A∪B| = |A|+|B|-|A∩B| (the arrays are distinct by construction):
+      one array_intersect per pair is the only array op, the same exact
+      rational as the oracles' len(list_distinct(a || b)) denominator;
+    - the (i, la, lb) projection sits behind an explode(array(struct))
+      Generate barrier (r13, the winnow/simhash pin): CollapseProject
+      cannot cross it, so the intersect is not re-inlined into both the
+      threshold filter and the output projection (two hash-set builds
+      per pair). Measured on the verify (sf0.1, 233k candidates on the
+      contrast-free fixture): 38.1 s → 20.0 s noop, identical rows.
+    """
+    la, lb = F.size("_sa"), F.size("_sb")
     jac = F.col("_i").cast("double") / (
         F.col("_la") + F.col("_lb") - F.col("_i")
     )
-    # the (i, la, lb) projection sits behind an explode(array(struct))
-    # Generate barrier (r13, the _jaccard_verify trade): without it,
-    # CollapseProject re-inlines the intersect into the threshold filter
-    # AND the output projection — two hash-set builds per surviving pair
     return (
-        a.crossJoin(b)
-        .filter((F.col(a_name) < F.col(b_name)) & (ratio >= _JACCARD_T))
+        pairs.filter(F.least(la, lb) / F.greatest(la, lb) >= _JACCARD_T)
         .select(
-            a_name,
-            b_name,
+            a,
+            b,
             F.explode(
                 F.array(
                     F.struct(
                         F.size(F.array_intersect("_sa", "_sb")).alias("_i"),
-                        F.size("_sa").alias("_la"),
-                        F.size("_sb").alias("_lb"),
+                        la.alias("_la"),
+                        lb.alias("_lb"),
                     )
                 )
             ).alias("_v"),
         )
-        .select(a_name, b_name, "_v._i", "_v._la", "_v._lb")
+        .select(a, b, "_v._i", "_v._la", "_v._lb")
         .filter(jac >= _JACCARD_T)
-        .select(a_name, b_name, jac.alias("jaccard"))
+        .select(a, b, jac.alias("jaccard"))
     )
+
+
+def _ids_injective(d: DataFrame) -> bool:
+    """True when xxhash64 is PROVEN injective on the shingles of ``d``
+    (doc_id, sh): one aggregate over the shingle rows checks (a) no
+    shingle is null and (b) count_distinct(shingle) ==
+    count_distinct(xxhash64(shingle)). Both hold ⇒ xxhash64 restricted
+    to this corpus's shingle set is a bijection onto its image, so for
+    EVERY doc pair |hash(A) ∩ hash(B)| = |A ∩ B| and |hash(A)| = |A|
+    (shingled() arrays are distinct, and an injective map keeps them
+    distinct) — a Jaccard over ids is bit-identical to the string form
+    BY THEOREM, not by a collision-probability argument. The one check
+    behind both id encodes: _shingle_ids (per query) and the bucketed
+    layout's build (once per ingest).
+
+    The 64-bit ceiling: with n distinct shingles a collision has
+    probability ≈ n²/2⁶⁵ — ~1e-7 at 2 M shingles, but likely (≈ 3%
+    at 10⁹, past 50% near 5·10⁹). Near 10⁹ distinct shingles the check
+    therefore starts refusing the encode and the verify falls back to
+    the string shingles: the result stays exact, it only runs slower
+    (the ~2.3× per-pair id saving is lost). No wider encode is built.
+    """
+    row = (
+        d.select(F.explode("sh").alias("g"))
+        .agg(
+            F.count_distinct("g").alias("ns"),
+            F.count_distinct(F.xxhash64("g")).alias("nh"),
+            F.sum(F.col("g").isNull().cast("long")).alias("nn"),
+        )
+        .first()
+    )
+    return (row.nn or 0) == 0 and row.ns == row.nh
+
+
+def _shingle_ids(d: DataFrame) -> DataFrame | None:
+    """(doc_id, sh) with the shingle STRINGS re-encoded as xxhash64 ids —
+    or None when _ids_injective cannot prove the encode exact for this
+    corpus (r14, VERDICT r13 #1).
+
+    The exact-Jaccard verify's per-pair cost is one array_intersect hash
+    -set build over two ~|doc|-element STRING arrays; over int64 ids the
+    same build is ~2.3× cheaper and the carried arrays shuffle fewer
+    bytes (steep key end-to-end 10.35 → 4.56 s median, jaccard_pairs
+    23.7 → 10.5 s, identical rows). The check is one construction-time
+    job over the already-pinned table (the pq_adc/cdc_merge
+    construction-collect precedent), ~0.2–0.5 s at sf0.1. See
+    _ids_injective for the exactness theorem and the 64-bit ceiling.
+    """
+    if not _ids_injective(d):
+        return None
+    return d.select("doc_id", F.expr(_ID_ENCODE).alias("sh"))
+
+
+def _encoded(d: DataFrame) -> DataFrame:
+    """``d`` with its shingles as ids when _shingle_ids proves that exact,
+    else ``d`` unchanged: the input every exact-Jaccard consumer takes."""
+    ids = _shingle_ids(d)
+    return d if ids is None else ids
 
 
 @query(
@@ -399,7 +414,7 @@ def q_llm_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     collects ONE scalar (sum of labels, strictly decreasing until fixed
     point). Candidate pairs here are the exact small-corpus oracle
     (crossJoin, SURVEY.md §7.4 exception); at 100 TB they come from the
-    LSH keys (q_llm_near_dedup / q_llm_ann_lsh) and this component pass
+    LSH keys (q_llm_minhash_steep / q_llm_ann_lsh) and this component pass
     runs unchanged on those edges. The DuckDB oracle computes the same
     components via recursive transitive closure.
 
@@ -562,13 +577,13 @@ def q_llm_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     (q_llm_dup_clusters), and the quality blend (q_llm_quality_score) —
     into the pipeline a training-data team actually ships.
 
-    100 TB plan: pairs come from LSH (q_llm_near_dedup) instead of the
+    100 TB plan: pairs come from LSH (q_llm_minhash_steep) instead of the
     documented O(n²) exact join used at fixture scale; components and the
     per-component argmax (a bounded-partition window — near-dup components
     are tiny) run unchanged on those edges.
     """
     d = shingled(load_table(spark, sf_dir, "documents"))
-    pairs = exact_pair_grid(d, "va", "vb").select("va", "vb")
+    pairs = exact_pair_grid(_encoded(d), "va", "vb").select("va", "vb")
     docs = load_table(spark, sf_dir, "documents")
     comp = min_label_components(docs.select("doc_id"), pairs, "doc_id")
     toks = F.split("text", " ")
@@ -1193,6 +1208,7 @@ def q_llm_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _MH_FNS = 8  # minhash functions (disjoint sha256 hex windows)
 _MH_BANDS = [(0, 1), (2, 3), (4, 5), (6, 7)]  # 4 bands x 2 rows
+_N_BUCKETS = 32  # bucketed minhash layout: buckets, files, dedup partitions
 
 
 @query(
@@ -1228,19 +1244,18 @@ _MH_BANDS = [(0, 1), (2, 3), (4, 5), (6, 7)]  # 4 bands x 2 rows
     """,
 )
 def q_llm_minhash_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash-LSH with DETERMINISTIC hash functions — the exactly
-    oracle-checkable twin of q_llm_near_dedup (whose ml-lib hashes are
-    engine-private, forcing a rows-only check). Eight minhash functions
-    come from disjoint 8-hex-char windows of sha256(shingle); signatures
-    band 4×2, candidates equi-join per band, and survivors are verified
-    with exact shingle Jaccard >= 0.4. Both engines compute bit-identical
-    signatures, bands, candidates, and verdicts — LSH itself under the
-    exact-value gate, recall gaps and all.
+    """MinHash-LSH with DETERMINISTIC hash functions, 4 bands × 2 rows.
+    Eight minhash functions come from disjoint 8-hex-char windows of
+    sha256(shingle); signatures band 4×2, candidates come from one band
+    self-join, and survivors are verified with exact shingle Jaccard
+    >= 0.4. Both engines compute bit-identical signatures, bands,
+    candidates, and verdicts — LSH itself under the exact-value gate,
+    recall gaps and all.
 
-    100 TB plan: identical to the production LSH shape — signature build
-    is one explode + min-agg per doc (partial map-side); each band is an
-    equi-join on a 128-bit key (uniform); verification touches candidate
-    pairs only. The UNION dedups band collisions on the pair key.
+    100 TB plan: the production LSH shape — the signature build is one
+    map-only kernel pass per doc; the band join is one equi-join on the
+    (band, 2 × 32-bit) key (uniform); verification touches candidate
+    pairs only (see _minhash_pairs).
 
     CORPUS-CONTRAST CONTRACT (r10, measured): banded candidates number
     Θ(P_band(J_bg) · n²) where J_bg is the corpus's BACKGROUND pairwise
@@ -1253,187 +1268,117 @@ def q_llm_minhash_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     (2 GB sort spills, killed; SCALE.md r10). That is LSH doing its
     job on a contrast-free corpus, not a plan defect; no ×N copy
     scheme can restore contrast the base corpus lacks. Production
-    tuning when J_bg is higher: steeper bands (more rows per band via
-    more/narrower hash windows) or word-level shingles — both raise
-    contrast at the same plan shape.
+    tuning when J_bg is higher: steeper bands (q_llm_minhash_steep) or
+    word-level shingles — both raise contrast at the same plan shape.
+    """
+    return _minhash_pairs(spark, sf_dir, _MH_FNS, ("",), _MH_BANDS)
+
+
+def _minhash_pairs(
+    spark: SparkSession,
+    sf_dir: str,
+    n_fns: int,
+    salts: tuple[str, ...],
+    bands: list[tuple[int, ...]],
+) -> DataFrame:
+    """Verified MinHash-LSH pairs (doc_a, doc_b, jaccard): ``n_fns``
+    signature windows of the ``salts``-salted sha256 digests
+    (_minhash_sigs), banded by ``bands`` (_band_candidates), verified
+    with exact Jaccard over the checked id encode (_jaccard_verify).
 
     The shingle and signature tables are PINNED (localCheckpoint — the
-    Spark analog of the oracle's MATERIALIZED CTEs): sig feeds 2 branches
-    per band × 4 bands and d feeds the verify joins, so without the pin
-    the corpus would statically re-scan + re-shingle per reference (10
-    scans measured; AQE reuse is a runtime maybe, not a plan property).
-    Production does exactly this: the signature table is a materialized
-    artifact, built once per corpus snapshot.
+    Spark analog of the oracle's MATERIALIZED CTEs): sig feeds both band
+    self-join sides and d feeds the signature kernel, the encode check
+    and both verify joins, so without the pin the corpus would
+    statically re-scan + re-shingle per reference (10 scans measured;
+    AQE reuse is a runtime maybe, not a plan property). Production does
+    exactly this: the signature table is a materialized artifact, built
+    once per corpus snapshot.
     """
     d = shingled(
         load_table(spark, sf_dir, "documents")
     ).localCheckpoint(eager=False)
-    # r14 (guide §4.2, VERDICT r13 #1): the signature table comes from
-    # ONE Arrow kernel pass over the per-doc shingle rows — no explode,
-    # no min-agg Exchange, no conv(substring(hex)) string round-trips,
-    # distinct shingles digested once per batch. Bit-exact vs the
-    # r10–r13 explode + min(conv(substring(sha2))) aggregate (proof in
-    # _minhash_sigs' docstring; asserted in tests + sig_kernel_bench).
-    sig = _minhash_sigs(d, _MH_FNS, ("",)).localCheckpoint(eager=False)
-    # Band candidate generation as ONE self-join over the unpivoted
-    # (doc_id, band, bi, bj) rows (r13 optimization, guide §2.4): the
-    # r10–r12 form ran four separate per-band joins unioned — identical
-    # candidate pairs, but 8 shuffle Exchanges and ~4× the scheduled
-    # stages for the same shuffled bytes (4 band rows/doc × 2 sides
-    # either way). One equi-join on the composite (band, bi, bj) key is
-    # also the production LSH shape: one banding pass, one shuffle.
-    bands_long = sig.select(
+    sig = _minhash_sigs(d, n_fns, salts).localCheckpoint(eager=False)
+    return _jaccard_verify(_band_candidates(sig, bands), _encoded(d))
+
+
+def _band_candidates(
+    sig: DataFrame, bands: list[tuple[int, ...]], n_buckets: int | None = None
+) -> DataFrame:
+    """(doc_a, doc_b), doc_a < doc_b, once per doc pair whose signatures
+    agree on every row of at least one band of ``bands`` (tuples of
+    sig column indexes, all of one width r).
+
+    ONE self-join over the unpivoted (doc_id, band, k0..k{r-1}) rows
+    (r13, guide §2.4): the r10–r12 form ran one join per band, unioned —
+    identical candidate pairs, but 2 shuffle Exchanges per band (8 at
+    4×2, 12 at 6×3) and ~b× the scheduled stages for the same shuffled
+    bytes (b band rows/doc × 2 sides either way). Both sides are the
+    identical subplan, so Spark reuses the exchange: one shuffle write.
+    At 100 TB this is the production LSH shape — one banding pass, one
+    shuffle keyed on (band, band-hash).
+
+    ``n_buckets`` is set by the bucketed-layout key. The join then
+    carries a merge hint (a production sig table outgrows any broadcast
+    threshold, and the pinned exchange census must not flip with
+    fixture stats), and the pair dedup is partitioned by doc_a into the
+    layout's bucket count instead of hash(doc_a, doc_b) (r14b, guide
+    §2.4): HashPartitioning(doc_a, n_buckets) satisfies the dedup's
+    clustered distribution AND co-partitions with the bucketed corpus
+    scan, so the doc_a verify merge-join consumes the dedup's exchange —
+    one exchange fewer (5 → 4). The trade (duplicate band-collision
+    pairs, ≤ b× and 16 bytes each, cross that exchange un-prededuped)
+    measured a net win at sf0.1: noop median 1.68 → 1.44 s, identical
+    rows.
+    """
+    keys = [f"k{k}" for k in range(len(bands[0]))]
+    rows = sig.select(
         "doc_id",
         F.explode(
             F.array(
                 *[
                     F.struct(
-                        F.lit(k).alias("band"),
-                        F.col(f"sig{i}").alias("bi"),
-                        F.col(f"sig{j}").alias("bj"),
+                        F.lit(bi).alias("band"),
+                        *[F.col(f"sig{i}").alias(k) for k, i in zip(keys, band)],
                     )
-                    for k, (i, j) in enumerate(_MH_BANDS)
+                    for bi, band in enumerate(bands)
                 ]
             )
         ).alias("bk"),
-    ).select("doc_id", "bk.band", "bk.bi", "bk.bj")
-    a = bands_long.select(F.col("doc_id").alias("doc_a"), "band", "bi", "bj")
-    b = bands_long.select(F.col("doc_id").alias("doc_b"), "band", "bi", "bj")
-    cand = (
-        a.join(b, ["band", "bi", "bj"])
+    ).select("doc_id", "bk.*")
+    a = rows.withColumnRenamed("doc_id", "doc_a")
+    b = rows.withColumnRenamed("doc_id", "doc_b")
+    pairs = (
+        a.join(b.hint("merge") if n_buckets else b, ["band", *keys])
         .filter(F.col("doc_a") < F.col("doc_b"))
         .select("doc_a", "doc_b")
-        .distinct()
     )
-    return _jaccard_verify(cand, d)
-
-
-def _shingle_ids(d: DataFrame) -> DataFrame | None:
-    """(doc_id, sh) with the shingle STRINGS re-encoded as xxhash64 ids —
-    or None when the encode cannot be PROVEN exact for this corpus
-    (r14 optimization, the second half of VERDICT r13 #1, shipped with
-    the bit-exactness proof that verdict required).
-
-    The exact-Jaccard verify's per-pair cost is one array_intersect hash
-    -set build over two ~|doc|-element STRING arrays; over int64 ids the
-    same build is ~2.3× cheaper (measured, § below) and the carried
-    arrays shuffle fewer bytes. A hash encode is only legal here if it
-    provably preserves every intersection size, so this helper CHECKS
-    injectivity on the actual corpus first: one aggregate over the
-    pinned shingle table asserts (a) no shingle is null and (b)
-    count_distinct(shingle) == count_distinct(xxhash64(shingle)). When
-    both hold, xxhash64 restricted to this corpus's shingle set is a
-    bijection onto its image, so for EVERY doc pair
-    |hash(A) ∩ hash(B)| = |A ∩ B| and |hash(A)| = |A| (shingled() arrays
-    are distinct, and an injective map keeps them distinct) — the
-    jaccard output is bit-identical to the string form BY THEOREM, not
-    by a collision-probability argument. On any collision or null
-    shingle (never observed; P ≈ n²/2⁶⁵ at 2 M shingles) the caller
-    keeps the string path, trading the speedup for unconditional
-    exactness. The check itself is one construction-time job over the
-    already-pinned table (the pq_adc/cdc_merge construction-collect
-    precedent), ~0.2–0.5 s at sf0.1 against a measured ~5.8 s verify
-    saving on the steep key.
-    """
-    row = (
-        d.select(F.explode("sh").alias("g"))
-        .agg(
-            F.count_distinct("g").alias("ns"),
-            F.count_distinct(F.xxhash64("g")).alias("nh"),
-            F.sum(F.col("g").isNull().cast("long")).alias("nn"),
-        )
-        .first()
-    )
-    if (row.nn or 0) != 0 or row.ns != row.nh:
-        return None
-    return d.select(
-        "doc_id", F.expr("transform(sh, s -> xxhash64(s))").alias("sh")
-    )
+    if n_buckets is None:
+        return pairs.distinct()
+    return pairs.repartition(n_buckets, "doc_a").dropDuplicates()
 
 
 def _jaccard_verify(
-    cand, d: DataFrame, merge: bool = False, id_col: str | None = None
+    cand: DataFrame, d: DataFrame, merge: bool = False
 ) -> DataFrame:
-    """Exact-Jaccard verify of banded candidate pairs, shared by the
-    minhash keys (r13 optimization, guide §1.2 per-task work).
+    """Exact-Jaccard verify of LSH candidate pairs (doc_a, doc_b) against
+    the shingle table ``d`` (doc_id, sh) — string shingles or ids the
+    caller has proven exact (_encoded, or the bucketed layout's ids).
+    Returns (doc_a, doc_b, jaccard rounded to 6); the per-pair work is
+    _jaccard_at_least, so the verify also skips the intersect for pairs
+    the length prefilter rules out.
 
-    Two per-pair savings over the r10–r12 inline form, both
-    value-identical:
-
-    - |A∪B| = |A| + |B| - |A∩B|: the shingle arrays are DISTINCT by
-      construction (shingled() wraps array_distinct), so the union size
-      is pure integer arithmetic — the array_union evaluation (a second
-      hash-set build over both arrays per pair) disappears. Same exact
-      rational as the oracle's len(list_distinct(sa||sb)) denominator,
-      and the identity the q_llm_lsh_recall/q_llm_jaccard_pairs oracles
-      already use.
-    - the remaining array_intersect evaluates ONCE per pair: the
-      (i, la, lb) projection sits behind an explode(array(struct(...)))
-      Generate barrier (the winnow/simhash pin pattern), which
-      CollapseProject cannot cross — unpinned, the filter and the
-      output projection each re-inline the intersect (2× per pair).
-
-    Measured (sf0.1, 233k candidates on the contrast-free fixture —
-    J_bg ≈ 0.17 by spec): verify stage 38.1 s → 20.0 s noop, identical
-    256 output rows. On a real-contrast corpus candidates are the tiny
-    minority, but the per-pair cost constant is what the ×N probes pay.
-
-    r14: the per-pair intersect runs over xxhash64 shingle IDS when the
-    encode is proven exact for this corpus (_shingle_ids' checked
-    injectivity — bit-identical output by theorem, string fallback
-    otherwise). Measured on the steep key end-to-end: 10.35 → 4.56 s
-    median (same process, interleaved), identical 256 rows. NOT applied
-    on the bucketed-layout path (merge=True): there the corpus sides
-    already merge-join the layout in place and the whole-key A/B showed
-    the per-query check job costing more than the fixture-scale verify
-    saving (2.50 → 3.07 s median) — for that path the encode belongs IN
-    the once-per-ingest layout (ids stored next to the strings with the
-    same build-time injectivity assert) — which is exactly what
-    ``id_col`` delivers (r14b): when the caller's layout already CARRIES
-    the xxhash64 id arrays (column ``id_col``, written next to the
-    strings under the build-time injectivity assert — see
-    q_llm_minhash_bucketed's layout build), the verify consumes them
-    straight off the bucketed scan: zero per-query check job, zero
-    per-query transform, and the same by-theorem exactness (the assert
-    ran when the layout was built, against the same corpus the
-    content-address pins).
+    ``merge`` (the bucketed layout) hints both corpus sides to
+    sort-merge join, so they join the doc_id-bucketed scan in place and
+    only the candidate table shuffles.
     """
-    if id_col is not None:
-        src = d.select("doc_id", F.col(id_col).alias("sh"))
-    else:
-        ids = None if merge else _shingle_ids(d)
-        src = ids if ids is not None else d
-    sa = src.select(
-        F.col("doc_id").alias("doc_a"), F.col("sh").alias("sha_arr")
-    )
-    sb = src.select(
-        F.col("doc_id").alias("doc_b"), F.col("sh").alias("shb_arr")
-    )
+    sa = d.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("_sa"))
+    sb = d.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("_sb"))
     if merge:
         sa, sb = sa.hint("merge"), sb.hint("merge")
-    pinned = (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.size(F.array_intersect("sha_arr", "shb_arr")).alias("i"),
-                        F.size("sha_arr").alias("la"),
-                        F.size("shb_arr").alias("lb"),
-                    )
-                )
-            ).alias("v"),
-        )
-        .select("doc_a", "doc_b", "v.i", "v.la", "v.lb")
-    )
-    jac = F.col("i").cast("double") / (
-        F.col("la") + F.col("lb") - F.col("i")
-    ).cast("double")
-    return pinned.filter(jac >= 0.4).select(
-        "doc_a", "doc_b", F.round(jac, 6).alias("jaccard")
+    pairs = cand.join(sa, "doc_a").join(sb, "doc_b")
+    return _jaccard_at_least(pairs, "doc_a", "doc_b").select(
+        "doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard")
     )
 
 
@@ -1453,8 +1398,8 @@ def _minhash_sigs(d: DataFrame, n_fns: int, salts: tuple[str, ...]) -> DataFrame
     shingle is digested once per batch (``pd.factorize``) instead of once
     per occurrence, which on a shingle distribution with repeats (any
     real corpus; the fixture's small vocabulary by spec) removes most of
-    the digest work outright. Measured head-to-head in
-    tools/sig_kernel_bench.py; value identity asserted there at 1x and in
+    the digest work outright. Measured 47× faster than the JVM form at
+    10× corpus (OPTIMIZATION_r14.md); value identity is asserted in
     tests/test_plan_shape.py::test_minhash_sig_kernel_exact.
 
     BIT-EXACTNESS vs the JVM aggregate form (and the DuckDB oracle texts,
@@ -1541,7 +1486,7 @@ def _minhash_sigs(d: DataFrame, n_fns: int, salts: tuple[str, ...]) -> DataFrame
 # windows each, so both engines stay bit-identical.
 _MH_STEEP_FNS = 18
 _MH_STEEP_BANDS = [tuple(range(3 * b, 3 * b + 3)) for b in range(6)]
-_MH_STEEP_SALTS = ["", "#1", "#2"]
+_MH_STEEP_SALTS = ("", "#1", "#2")
 
 
 def _steep_sig_sql(h: int) -> str:
@@ -1592,7 +1537,8 @@ _MH_STEEP_ORACLE = f"""
 def q_llm_minhash_steep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH with STEEP banding (6 bands × 3 rows) — the measured
     production answer to q_llm_minhash_exact's single-box ×100 ceiling
-    (SCALE.md r11; VERDICT r11 #3).
+    (SCALE.md r11; VERDICT r11 #3), and the checked near-dup path
+    downstream stages (q_llm_dedup_survivors at scale) consume.
 
     The 4×2 twin's ×100 entropy-corpus probe died on DISK: P_band =
     4·J² ≈ 5e-4 at the real-crawl background J_bg ≈ 0.01 means ~52 M
@@ -1601,61 +1547,15 @@ def q_llm_minhash_steep(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapse the background by J one more time: P = 6·J³ ≈ 6e-6 —
     ~70× fewer candidates — while planted near-dups at J ≈ 0.69 still
     hit 1-(1-J³)⁶ ≈ 0.91 detection (vs 0.92 for 4×2: recall unchanged
-    within noise, measured on the planted pairs by the r12 probe). Same
-    plan shape as the twin: signature = explode + 18 partial min-aggs
-    (three hoisted salted sha256 digests per shingle), one equi-join per
-    band on a 192-bit composite key, exact-Jaccard verify on candidates
-    only. This is a PARAMETER move, not a plan change — exactly the
-    tuning the twin's docstring documents for high-J_bg corpora, now a
-    driver-checked key of its own.
-
-    Pins as in the twin: shingles and signatures each feed multiple
-    branches (localCheckpoint ≡ the oracle's MATERIALIZED CTEs).
+    within noise, measured on the planted pairs by the r12 probe; SCALE.md).
+    Same plan as the twin (_minhash_pairs) with 18 signature windows
+    from three salted sha256 digests and a 3-row band key: a PARAMETER
+    move, not a plan change — exactly the tuning the twin's docstring
+    documents for high-J_bg corpora, now a driver-checked key of its own.
     """
-    d = shingled(
-        load_table(spark, sf_dir, "documents")
-    ).localCheckpoint(eager=False)
-    # r14 (guide §4.2, VERDICT r13 #1): signature build as ONE Arrow
-    # kernel pass — see _minhash_sigs for the bit-exactness proof vs the
-    # r12–r13 explode + 3×sha2 + 18×conv(substring) aggregate form.
-    sig = _minhash_sigs(
-        d, _MH_STEEP_FNS, tuple(_MH_STEEP_SALTS)
-    ).localCheckpoint(eager=False)
-    # Band candidate generation as ONE self-join over the unpivoted
-    # (doc_id, band, k0, k1, k2) rows — same r13 restructure as
-    # q_llm_minhash_exact (guide §2.4): identical candidate pairs, the
-    # same shuffled bytes (6 band rows/doc × 2 sides), but one Exchange
-    # pair instead of twelve and a fraction of the scheduled stages.
-    bands_long = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(bi).alias("band"),
-                        *[
-                            F.col(f"sig{i}").alias(f"k{k}")
-                            for k, i in enumerate(band)
-                        ],
-                    )
-                    for bi, band in enumerate(_MH_STEEP_BANDS)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "bk.band", "bk.k0", "bk.k1", "bk.k2")
-    a = bands_long.select(
-        F.col("doc_id").alias("doc_a"), "band", "k0", "k1", "k2"
+    return _minhash_pairs(
+        spark, sf_dir, _MH_STEEP_FNS, _MH_STEEP_SALTS, _MH_STEEP_BANDS
     )
-    b = bands_long.select(
-        F.col("doc_id").alias("doc_b"), "band", "k0", "k1", "k2"
-    )
-    cand = (
-        a.join(b, ["band", "k0", "k1", "k2"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    return _jaccard_verify(cand, d)
 
 
 @query("q_llm_minhash_bucketed", oracle=_MH_STEEP_ORACLE)
@@ -1693,31 +1593,19 @@ def q_llm_minhash_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     r14b (the follow-on OPTIMIZATION_r14 §4b recorded): the layout also
     stores the xxhash64 shingle-ID arrays NEXT TO the strings (`shid`),
-    written only when the build-time injectivity assert holds on this
-    corpus (count_distinct(shingle) == count_distinct(xxhash64(shingle)),
-    no nulls — _shingle_ids' checked-exactness contract, run once per
-    ingest instead of once per query). The verify's per-pair
-    array_intersect then hash-sets int64 ids instead of ~5-char strings
-    straight off the bucketed scan — the ~2× per-pair saving the other
-    minhash keys measured in §4b, now with ZERO per-query check cost.
-    On the (never-observed) collision the column is absent and the
-    verify keeps the strings; either way the layout version tag (v2)
-    keys fresh scratch so a stale string-only layout can never be
-    silently consumed as an id layout.
+    written only when _ids_injective holds on this corpus — the same
+    checked-exactness contract _shingle_ids applies, run once per ingest
+    instead of once per query. The verify's per-pair array_intersect
+    then hash-sets int64 ids instead of ~5-char strings straight off the
+    bucketed scan — the ~2× per-pair saving the other minhash keys
+    measured in §4b, with ZERO per-query check cost. On a collision the
+    column is absent and the verify keeps the strings; either way the
+    layout version tag (v2) keys fresh scratch so a stale string-only
+    layout can never be silently consumed as an id layout.
 
-    r14b (guide §2.4, "two operations keyed the same way share one
-    exchange"): the candidate dedup is partitioned by doc_a into the
-    LAYOUT'S bucket count instead of hash(doc_a, doc_b) — a
-    HashPartitioning(doc_a, 32) satisfies the (doc_a, doc_b) dedup's
-    clustered distribution AND co-partitions with the 32-bucket corpus
-    scan, so the doc_a verify merge-join consumes the dedup's exchange
-    directly: the pair table crosses one exchange fewer (plan census
-    5 → 4). The trade (duplicate band-collision pairs — ≤6×, 16 bytes
-    each — now cross that one exchange un-prededuped, where the old
-    (doc_a, doc_b) distinct partial-aggregated below it) measured a
-    net win at sf0.1: noop median 1.68 → 1.44 s, identical rows. The
-    32 is the layout's n_buckets (a layout constant that scales with
-    the ingest layout), not a core-count tune.
+    The candidate dedup shares the doc_a verify exchange (r14b; see
+    _band_candidates): plan census 5 → 4. _N_BUCKETS is a layout
+    constant that scales with the ingest layout, not a core-count tune.
     """
     from token_burn_listener_spark.operators.storage import (
         _ensure_bucketed,
@@ -1730,20 +1618,9 @@ def q_llm_minhash_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         base = shingled(load_table(s, dd, "documents")).localCheckpoint(
             eager=False
         )
-        row = (
-            base.select(F.explode("sh").alias("g"))
-            .agg(
-                F.count_distinct("g").alias("ns"),
-                F.count_distinct(F.xxhash64("g")).alias("nh"),
-                F.sum(F.col("g").isNull().cast("long")).alias("nn"),
-            )
-            .first()
-        )
-        if (row.nn or 0) == 0 and row.ns == row.nh:
-            base = base.withColumn(
-                "shid", F.expr("transform(sh, s -> xxhash64(s))")
-            )
-        return base.repartition(32, "doc_id")
+        if _ids_injective(base):
+            base = base.withColumn("shid", F.expr(_ID_ENCODE))
+        return base.repartition(_N_BUCKETS, "doc_id")
 
     name = _ensure_bucketed(
         spark,
@@ -1751,17 +1628,15 @@ def q_llm_minhash_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "documents_sh2",  # v2: strings + proven-injective xxhash64 ids
         "doc_id",
         "bkt_mh",
-        n_buckets=32,
+        n_buckets=_N_BUCKETS,
         build=_build,
         source=f"{sf_dir}/documents.parquet",
     )
     d = spark.table(name)
     # r14 (guide §4.2, VERDICT r13 #1): signature build as ONE Arrow
-    # kernel pass over the 32-bucket shingle scan — map-only, so the
-    # 32-way bucket parallelism carries straight through the kernel; see
-    # _minhash_sigs for the bit-exactness proof vs the r13 explode +
-    # 3×sha2 + 18×conv(substring) aggregate form.
-    sig_raw = _minhash_sigs(d, _MH_STEEP_FNS, tuple(_MH_STEEP_SALTS))
+    # kernel pass over the bucketed shingle scan — map-only, so the
+    # bucket parallelism carries straight through the kernel
+    sig_raw = _minhash_sigs(d, _MH_STEEP_FNS, _MH_STEEP_SALTS)
     # layout assert #1: the signature build is a map-only pass over the
     # bucketed scan — no Exchange anywhere below it (the r13 aggregate
     # form consumed the scan's HashPartitioning(doc_id); the r14 kernel
@@ -1779,59 +1654,10 @@ def q_llm_minhash_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exactly as the twin does — the LAYOUT pins the corpus, the
     # checkpoint pins the derived 18-long signature table.
     sig = sig_raw.localCheckpoint(eager=False)
-    # Band candidate generation as ONE self-join (r13 optimization,
-    # guide §2.4): signatures unpivot to (doc_id, band, k0, k1, k2) —
-    # 6 rows per doc — and candidates are a single equi-join on the
-    # composite (band, k0, k1, k2) key. The r13-build form ran SIX
-    # separate joins (one per band) unioned: identical candidate pairs,
-    # but 12 shuffle Exchanges + 24 sorts of the signature table and
-    # ~25 scheduled stages, measured at ~4.4 s of the key's ~10 s warm
-    # wall at sf0.1. The unpivoted self-join shuffles the SAME bytes
-    # (6 band rows/doc × 2 sides) through ONE Exchange pair — and
-    # because both sides are the identical subplan, Spark reuses the
-    # exchange (ReusedExchange in plans/r13/*_after.txt): one shuffle
-    # write total. At 100 TB this is also the production LSH shape: one
-    # banding pass, one shuffle keyed on (band, band-hash). Merge hint
-    # as before: a production sig table outgrows any broadcast
-    # threshold, and the pinned census must not flip with fixture stats.
-    bands_long = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(bi).alias("band"),
-                        *[
-                            F.col(f"sig{i}").alias(f"k{k}")
-                            for k, i in enumerate(band)
-                        ],
-                    )
-                    for bi, band in enumerate(_MH_STEEP_BANDS)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "bk.band", "bk.k0", "bk.k1", "bk.k2")
-    a = bands_long.select(
-        F.col("doc_id").alias("doc_a"), "band", "k0", "k1", "k2"
-    )
-    b = bands_long.select(
-        F.col("doc_id").alias("doc_b"), "band", "k0", "k1", "k2"
-    )
-    cand = (
-        a.join(b.hint("merge"), ["band", "k0", "k1", "k2"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        # dedup partitioned by doc_a into the layout's bucket count
-        # (r14b, guide §2.4 — rationale in the docstring): the dedup
-        # aggregate AND the doc_a verify merge-join both consume this
-        # one exchange, and no re-shuffle stands between the candidate
-        # table and the bucketed corpus scan.
-        .repartition(32, "doc_a")
-        .dropDuplicates()
-    )
-    out = _jaccard_verify(
-        cand, d, merge=True, id_col="shid" if "shid" in d.columns else None
-    )
+    cand = _band_candidates(sig, _MH_STEEP_BANDS, _N_BUCKETS)
+    if "shid" in d.columns:
+        d = d.select("doc_id", F.col("shid").alias("sh"))
+    out = _jaccard_verify(cand, d, merge=True)
     # layout assert #2: only candidate-bound data shuffles. Expected
     # shuffle Exchanges: 2 band-self-join sides (the unpivoted signature
     # table keyed on (band, k0, k1, k2)) + 1 shared candidate
@@ -1923,93 +1749,33 @@ def q_llm_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     sample is bit-identical on both engines, so the check stays exact
     while the brute-force denominator costs a quarter of the full grid.
 
-    100 TB plan: the found side is the production LSH shape (signature =
-    one explode + min-agg, bands = equi-joins on 128-bit keys). The exact
-    side is O(n^2) on the SAMPLED query docs only — exactly how a
-    production deployment estimates recall (the audit is per-sample, the
-    dedup is not).
+    100 TB plan: the found side is the production LSH shape (the
+    _minhash_pairs path: kernel signatures, one band self-join, exact
+    verify). The exact side is O(n^2) on the SAMPLED query docs only —
+    exactly how a production deployment estimates recall (the audit is
+    per-sample, the dedup is not).
 
     Shingle + signature tables are pinned (localCheckpoint) for the same
-    reason as q_llm_minhash_exact: sig feeds 8 band branches and d feeds
-    the grid + verify joins — unpinned, the corpus statically re-scans
-    per reference (12 scans measured before the pin).
+    reason as in _minhash_pairs: sig feeds both band self-join sides and
+    d feeds the grid + verify joins — unpinned, the corpus statically
+    re-scans per reference (12 scans measured before the pin).
     """
     d = shingled(
         load_table(spark, sf_dir, "documents")
     ).localCheckpoint(eager=False)
-    # r14: ONE checked id-encode (see _shingle_ids) shared by the exact
-    # grid and the banded verify below; the signature kernel still reads
-    # the STRING shingles (sha256-of-shingle is the oracle's definition).
-    ids = _shingle_ids(d)
-    dv = ids if ids is not None else d
-    # sampled exact pair count (the shared brute-force grid, a-side
-    # restricted to the deterministic 25% sample)
-    n_exact = (
-        exact_pair_grid(dv, sample_mod=4, encoded=ids is not None)
-        .agg(F.count("*").alias("n_exact"))
+    # ONE checked id-encode shared by the exact grid and the banded
+    # verify; the signature kernel still reads the STRING shingles
+    # (sha256-of-shingle is the oracle's definition).
+    dv = _encoded(d)
+    # sampled exact pair count (the brute-force grid, a-side restricted
+    # to the deterministic 25% sample)
+    n_exact = exact_pair_grid(dv, sample_mod=4).agg(
+        F.count("*").alias("n_exact")
     )
-    # banded-candidate verified pair count (the production path).
-    # r14 (guide §4.2, VERDICT r13 #1): signature build as ONE Arrow
-    # kernel pass — see _minhash_sigs for the bit-exactness proof vs the
-    # r10–r13 explode + min(conv(substring(sha2))) aggregate form.
+    # banded-candidate verified pair count over the same sample
     sig = _minhash_sigs(d, _MH_FNS, ("",)).localCheckpoint(eager=False)
-    # ONE unpivoted band self-join instead of four unioned per-band joins
-    # (the r13 restructure, guide §2.4 — see q_llm_minhash_exact): same
-    # candidate pairs, 8 shuffle Exchanges → 2.
-    bands_long = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(k).alias("band"),
-                        F.col(f"sig{i}").alias("bi"),
-                        F.col(f"sig{j}").alias("bj"),
-                    )
-                    for k, (i, j) in enumerate(_MH_BANDS)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "bk.band", "bk.bi", "bk.bj")
-    ba = bands_long.select(F.col("doc_id").alias("doc_a"), "band", "bi", "bj")
-    bb = bands_long.select(F.col("doc_id").alias("doc_b"), "band", "bi", "bj")
-    cand = (
-        ba.join(bb, ["band", "bi", "bj"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    sa2 = dv.select(
-        F.col("doc_id").alias("doc_a"), F.col("sh").alias("sha_arr")
-    )
-    sb2 = dv.select(
-        F.col("doc_id").alias("doc_b"), F.col("sh").alias("shb_arr")
-    )
-    jac_c = F.col("i").cast("double") / (F.col("la") + F.col("lb") - F.col("i"))
-    # (i, la, lb) behind the explode(array(struct)) Generate barrier so
-    # the threshold filter cannot re-inline the array_intersect (the
-    # _jaccard_verify trade: one intersect per pair, not two)
-    n_found = (
-        cand.filter(F.col("doc_a") % 4 == 0)
-        .join(sa2, "doc_a")
-        .join(sb2, "doc_b")
-        .select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.size(
-                            F.array_intersect("sha_arr", "shb_arr")
-                        ).alias("i"),
-                        F.size("sha_arr").alias("la"),
-                        F.size("shb_arr").alias("lb"),
-                    )
-                )
-            ).alias("v")
-        )
-        .select("v.i", "v.la", "v.lb")
-        .filter(jac_c >= 0.4)
-        .agg(F.count("*").alias("n_found"))
-    )
+    cand = _band_candidates(sig, _MH_BANDS).filter(F.col("doc_a") % 4 == 0)
+    n_found = _jaccard_verify(cand, dv).agg(F.count("*").alias("n_found"))
     # NULLIF (both engines): a corpus whose 25% sample has NO exact
     # near-dup pairs zeroes the denominator — Spark ANSI throws where
     # DuckDB yields NULL (the q_evt_pareto crash class); recall over an

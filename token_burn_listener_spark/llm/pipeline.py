@@ -16,7 +16,7 @@ map-only predicates (pushdown-friendly, no shuffle), dedup is the one
 shuffle (uniform sha256 key), and the near-dup stage — elided here
 because the fixture's near-dup signal lives on the embeddings table —
 slots between dedup and output as LSH candidate generation
-(q_llm_near_dedup) → connected components (q_llm_dup_clusters) →
+(q_llm_minhash_steep) → connected components (q_llm_dup_clusters) →
 keep component minimum, adding two more bounded shuffles.
 """
 

@@ -154,23 +154,25 @@ def query(key: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 #   promised (q_join_asof_forward ... q_join_star). The staleness
 #   keys the dirty block displaced slide to the r15 head.
 #
+#   Deleting q_llm_near_dedup from the r14 block pulled q_tpch_q2ish
+#   into positions 1-50 and q_agg_time_rollup into the r15 window.
+#
 #   r15 window (listed so the next round can verify positions 1-50
 #   against this comment after its rotation edit; amend with
 #   r15-dirty and new keys first — displaced keys slide onward):
-#   q_scan_parquet q_tpch_q2ish q_tpch_q9ish q_tpch_q11ish
-#   q_tpch_q15ish q_tpch_q16ish q_tpch_q17ish q_tpch_q20ish
-#   q_tpch_q21ish q_llm_term_stats q_llm_pmi_collocations
-#   q_llm_kneser_ney q_llm_multimodal q_diag_dq_checks q_join_full
-#   q_join_semi q_join_anti q_join_cross q_join_theta q_join_interval
-#   q_join_bloom q_llm_cosine_topk q_llm_knn_query q_llm_ann_lsh
-#   q_llm_centroids q_llm_ivf_search q_llm_knn_classify
-#   q_llm_hard_negatives q_llm_ann_recall q_llm_matryoshka_recall
-#   q_llm_anisotropy q_llm_emb_near_dup q_graph_triangles
-#   q_graph_pagerank q_join_asof q_join_salted q_agg_global
-#   q_agg_groupby q_agg_count_distinct q_agg_approx_distinct
-#   q_agg_sum_distinct q_agg_rollup q_agg_cube q_agg_grouping_sets
-#   q_agg_collect q_agg_stddev q_agg_percentile q_agg_conditional
-#   q_agg_having q_agg_pivot
+#   q_scan_parquet q_tpch_q9ish q_tpch_q11ish q_tpch_q15ish
+#   q_tpch_q16ish q_tpch_q17ish q_tpch_q20ish q_tpch_q21ish
+#   q_llm_term_stats q_llm_pmi_collocations q_llm_kneser_ney
+#   q_llm_multimodal q_diag_dq_checks q_join_full q_join_semi
+#   q_join_anti q_join_cross q_join_theta q_join_interval q_join_bloom
+#   q_llm_cosine_topk q_llm_knn_query q_llm_ann_lsh q_llm_centroids
+#   q_llm_ivf_search q_llm_knn_classify q_llm_hard_negatives
+#   q_llm_ann_recall q_llm_matryoshka_recall q_llm_anisotropy
+#   q_llm_emb_near_dup q_graph_triangles q_graph_pagerank q_join_asof
+#   q_join_salted q_agg_global q_agg_groupby q_agg_count_distinct
+#   q_agg_approx_distinct q_agg_sum_distinct q_agg_rollup q_agg_cube
+#   q_agg_grouping_sets q_agg_collect q_agg_stddev q_agg_percentile
+#   q_agg_conditional q_agg_having q_agg_pivot q_agg_time_rollup
 # ---------------------------------------------------------------------------
 DRIVER_ORDER: list[str] = [
     # --- r14 driver window (positions 1-50): canary + the 19
@@ -189,7 +191,6 @@ DRIVER_ORDER: list[str] = [
     "q_llm_jaccard_pairs",
     "q_llm_dedup_survivors",
     "q_llm_simhash",
-    "q_llm_near_dedup",
     "q_llm_fuzzy_dup",
     "q_llm_dup_clusters",
     "q_llm_corpus_prep",

@@ -219,7 +219,6 @@ ALLOW_PYTHON = {
     "q_llm_media_decode",  # mapInPandas REAL stdlib PPM/WAV decoders — the
                            # media-decode boundary is Python by definition
     "q_llm_tfidf",       # ml HashingTF/IDF pipeline
-    "q_llm_near_dedup",  # ml MinHashLSH
     "q_llm_ann_lsh",     # ml BucketedRandomProjectionLSH
     "q_llm_pack_sequences",  # applyInPandas: the one sequential-fold stage;
                              # only (doc_id, source, n_tokens) rows cross Arrow
@@ -256,8 +255,8 @@ ALLOW_PYTHON = {
     # r14 (VERDICT r13 #1): the MinHash signature build is one Arrow
     # kernel (_minhash_sigs) emitting INTEGER sig columns only — bit-
     # exact vs the explode + min(conv(substring(sha2))) aggregate form
-    # (proof in the docstring; identity asserted + measured 47x at x10
-    # corpus scale in tools/sig_kernel_bench.py)
+    # (proof in the docstring; identity asserted by
+    # test_minhash_sig_kernel_exact, 47x at x10 corpus in OPTIMIZATION_r14.md)
     "q_llm_minhash_exact",
     "q_llm_minhash_steep",
     "q_llm_minhash_bucketed",

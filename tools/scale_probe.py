@@ -36,7 +36,7 @@ prose's 0.17), while every 50th base doc plants one near-dup PAIR per
 two copies (copies 2k/2k+1 share their first ~80% of tokens — measured
 char-shingle J ≈ 0.688, above the 0.4 gate) so the true-positive set is
 linear in N and never cliques. This is the ONLY corpus the banded
-PRODUCTION keys (minhash_exact, near_dedup) may be ×N-probed on; their
+PRODUCTION keys (minhash_exact, minhash_steep) may be ×N-probed on; their
 exact-twin AUDIT keys (jaccard_pairs, lsh_recall) stay out of ×N probes
 entirely — their crossJoin pair grids are O(n²) BY DESIGN (the
 documented fixture-scale oracle baseline, SURVEY §7.4). Under this flag
@@ -136,7 +136,7 @@ PROBE_KEYS = [
     # --perturb-docs only — on plain key-shifted copies every doc is
     # duplicated N× and the detection degenerates to its output-bound
     # worst case (a contract violation, not a plan). The banded-LSH keys
-    # (minhash_exact, near_dedup) must NOT be ×N-probed on key-shifted
+    # (minhash_exact, minhash_steep) must NOT be ×N-probed on key-shifted
     # prose copies, perturbed or not: the synthetic fixture's background
     # shingle Jaccard is 0.17 (measured, SCALE.md r10), so ~11% of ALL
     # pairs band-collide by spec and candidates are Θ(n²) at any N —
