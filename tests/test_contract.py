@@ -199,3 +199,31 @@ def test_preflight_sweep_never_touches_live_jvm_dirs(tmp_path, monkeypatch):
     monkeypatch.setattr(sp, "_oldest_live_java_start", lambda: None)
     sp.preflight_sweep(tmp_root=str(tmp_path))
     assert not new.exists()
+
+
+def test_load_table_infers_schema_once_per_file_version(
+    spark, tmp_path, spark_jobs
+):
+    """load_table reuses the schema Spark inferred for a file: a second
+    load of the unchanged file starts no Spark job (a plain
+    spark.read.parquet starts a schema-inference job every call), and
+    rewriting the file with an added column is a new version whose
+    column appears."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from token_burn_listener_spark.tables import load_table
+
+    path = tmp_path / "region.parquet"
+    pq.write_table(pa.table({"r_regionkey": [0, 1]}), path)
+    load_table(spark, str(tmp_path), "region")
+    df, jobs = spark_jobs(lambda: load_table(spark, str(tmp_path), "region"))
+    assert jobs == 0
+    assert sorted(r.r_regionkey for r in df.collect()) == [0, 1]
+
+    pq.write_table(
+        pa.table({"r_regionkey": [0, 1], "r_name": ["AFRICA", "ASIA"]}), path
+    )
+    df = load_table(spark, str(tmp_path), "region")
+    assert df.columns == ["r_regionkey", "r_name"]
+    assert sorted(tuple(r) for r in df.collect()) == [(0, "AFRICA"), (1, "ASIA")]

@@ -458,3 +458,24 @@ def test_bigram_lm_reuses_count_exchange(spark, sf_dir):
         f"bigram_lm: no ReusedExchange in the final adaptive plan — the "
         f"corpus is being scanned twice again:\n{final[:4000]}"
     )
+
+
+def test_funnel_stages_take_one_shuffle(spark, sf_dir):
+    """q_evt_funnel and q_evt_funnel_latency read events once and build
+    the per-user stage table on ONE shuffle on user_id: two windows and
+    a groupBy over the same partitioning, no stage join and no pinned
+    (localCheckpoint) stage table."""
+    for key in ("q_evt_funnel", "q_evt_funnel_latency"):
+        qe = QUERIES[key](spark, sf_dir)._jdf.queryExecution()
+        plan = qe.executedPlan().toString()
+        scans = [ln for ln in plan.splitlines() if "FileScan parquet" in ln]
+        assert len(scans) == 1 and "events.parquet" in scans[0], (
+            f"{key}: expected one events scan:\n{plan}"
+        )
+        assert plan.count("Exchange hashpartitioning") == 1, (
+            f"{key}: expected exactly one hash shuffle:\n{plan}"
+        )
+        assert "Scan ExistingRDD" not in plan, (
+            f"{key}: a stage table is pinned again:\n{plan}"
+        )
+        assert "Join" not in plan, f"{key}: a stage join is back:\n{plan}"

@@ -274,6 +274,42 @@ def test_flag_canonical_matches_reference_walk(spark, hmax, forks):
     assert got == _reference_canonical(blocks, _REORG_DEPTH)
 
 
+def test_flag_canonical_jobs_do_not_grow_with_depth(
+    spark, monkeypatch, spark_jobs
+):
+    """The walk collects the confirmation window once and walks it on
+    the driver, so its Spark job count is the same at any depth — a
+    walk that runs one join per step starts more jobs the deeper it
+    goes."""
+    from token_burn_listener_spark.operators import events
+
+    blocks = [
+        {
+            "height": h,
+            "hash": f"a:{h}",
+            "parent_hash": f"a:{h - 1}" if h > 0 else None,
+            "n_events": 1,
+        }
+        for h in range(13)
+    ] + [
+        {"height": 10, "hash": "u:10", "parent_hash": "a:9", "n_events": 1},
+        {"height": 11, "hash": "u:11", "parent_hash": "u:10", "n_events": 1},
+    ]
+    df = spark.createDataFrame(
+        [(b["height"], b["hash"], b["parent_hash"], b["n_events"]) for b in blocks],
+        "height long, hash string, parent_hash string, n_events long",
+    )
+    jobs = {}
+    for depth in (2, 6):
+        monkeypatch.setattr(events, "_REORG_DEPTH", depth)
+        rows, jobs[depth] = spark_jobs(
+            lambda: events.flag_canonical(df).collect()
+        )
+        got = {r.hash for r in rows if r.canonical}
+        assert got == _reference_canonical(blocks, depth)
+    assert jobs[2] == jobs[6], jobs
+
+
 # ---------------------------------------------------------------------------
 # Gap detection vs a complement-interval reference on random id sets.
 # The in-fixture oracle only sees the one deterministic drop pattern

@@ -77,41 +77,44 @@ def q_evt_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _funnel_stages(e: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """The signup→click→purchase stage pipeline shared by q_evt_funnel
-    and q_evt_funnel_latency (extracted r12 review: the two copies had
-    to stay byte-identical for the latency numbers to describe the same
-    funnel the count key reports — q_evt_windowed_funnel already forked
-    one stage's predicate once).
+def _funnel_stages(e: DataFrame) -> DataFrame:
+    """The signup→click→purchase stage anchors shared by q_evt_funnel
+    and q_evt_funnel_latency (one definition, so the latency numbers
+    describe the same funnel the count key reports), as ONE per-user
+    table ``(user_id, s_ts, c_ts, p_ts)``.
 
     Each stage anchors at the earliest qualifying event after the
-    previous stage. The per-user stage aggregates feed BOTH their own
-    consumer and the next stage's join, so su/cl are pinned — unpinned,
-    the su subtree replays inside cl and pu (6 static scans measured).
-    Every join is aggregate⋈aggregate on user_id; each stage's
-    event_type predicate pushes to the parquet scan."""
-    su = (
-        e.filter(F.col("event_type") == "signup")
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("s_ts"))
-        .localCheckpoint(eager=False)
+    previous stage: ``s_ts`` is the user's first signup, ``c_ts`` the
+    first click after ``s_ts``, ``p_ts`` the first purchase after
+    ``c_ts``; a stage the user never reached is NULL, and so is every
+    later one. ``s_ts`` and then ``c_ts`` are ``min(when(...))`` over
+    ``Window.partitionBy("user_id")``, and ``p_ts`` is the groupBy on the
+    same partitioning, so the three stages cost one shuffle on user_id
+    and no join; the ``event_type IN (...)`` predicate pushes to the
+    parquet scan. Users with no signup come out with ``s_ts`` NULL.
+
+    Precondition: ``user_id`` and ``ts`` are non-null (FIXTURES.md).
+    The oracle's joins drop a NULL user_id from the click and purchase
+    stages, and its signup stage counts a user whose signups all have a
+    NULL ts; this table does neither."""
+    w = Window.partitionBy("user_id")
+    first = lambda pred, after: F.min(  # noqa: E731
+        F.when((F.col("event_type") == pred) & (F.col("ts") > after), F.col("ts"))
     )
-    cl = (
-        e.filter(F.col("event_type") == "click")
-        .join(su, "user_id")
-        .filter(F.col("ts") > F.col("s_ts"))
+    return (
+        e.filter(F.col("event_type").isin("signup", "click", "purchase"))
+        .withColumn(
+            "s_ts",
+            F.min(F.when(F.col("event_type") == "signup", F.col("ts"))).over(w),
+        )
+        .withColumn("c_ts", first("click", F.col("s_ts")).over(w))
         .groupBy("user_id")
-        .agg(F.min("ts").alias("c_ts"))
-        .localCheckpoint(eager=False)
+        .agg(
+            F.min("s_ts").alias("s_ts"),
+            F.min("c_ts").alias("c_ts"),
+            first("purchase", F.col("c_ts")).alias("p_ts"),
+        )
     )
-    pu = (
-        e.filter(F.col("event_type") == "purchase")
-        .join(cl, "user_id")
-        .filter(F.col("ts") > F.col("c_ts"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("p_ts"))
-    )
-    return su, cl, pu
 
 
 @query(
@@ -143,22 +146,28 @@ def q_evt_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchased, each stage anchored at the earliest qualifying event after
     the previous stage (strict event-order funnel, not mere co-occurrence).
 
-    100 TB plan: three passes over an event_type-pruned scan, each
-    aggregated per user BEFORE the next join — every join is
-    aggregate⋈aggregate on user_id (bounded, uniform), never
-    event⋈event. Each stage's scan pushes its event_type predicate to the
-    parquet reader. The stage counts are 1-row aggregates unioned at the
-    end — coordination cost is nil.
+    100 TB plan: one event_type-pruned scan and one shuffle on user_id
+    (bounded, uniform per-user partitions): the per-user stage table
+    (_funnel_stages) is two window passes and a groupBy over that one
+    partitioning, with no join. The three stage counts are one 1-row
+    aggregate, turned into the three stage rows by ``inline`` of a
+    3-struct array — coordination cost is nil.
     """
     e = load_table(spark, sf_dir, "events")
-    su, cl, pu = _funnel_stages(e)
-    row = lambda name, df: df.agg(  # noqa: E731
-        F.lit(name).alias("stage"), F.count("*").alias("users")
+    counts = _funnel_stages(e).agg(
+        *(F.count(c).alias(c) for c in ("s_ts", "c_ts", "p_ts"))
     )
-    return (
-        row("signup", su)
-        .unionAll(row("click_after_signup", cl))
-        .unionAll(row("purchase_after_click", pu))
+    stage = lambda name, c: F.struct(  # noqa: E731
+        F.lit(name).alias("stage"), F.col(c).alias("users")
+    )
+    return counts.select(
+        F.inline(
+            F.array(
+                stage("signup", "s_ts"),
+                stage("click_after_signup", "c_ts"),
+                stage("purchase_after_click", "p_ts"),
+            )
+        )
     )
 
 
@@ -1143,15 +1152,15 @@ def q_evt_funnel_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same stage anchors the funnel uses; averages are Σ(exact int)/n
     divided identically on both engines, reported in seconds.
 
-    100 TB plan: identical join discipline to q_evt_funnel (per-user
-    aggregates before every join, event_type predicates pushed to the
-    scan) plus one final 1-row latency aggregate — nothing new shuffles.
+    100 TB plan: the same per-user stage table as q_evt_funnel (one
+    event_type-pruned scan, one shuffle on user_id, no join), filtered
+    to users who signed up, plus one final 1-row latency aggregate —
+    nothing else shuffles.
     """
     e = load_table(spark, sf_dir, "events")
-    su, cl, pu = _funnel_stages(e)
     lat = (
-        su.join(cl, "user_id", "left")
-        .join(pu, "user_id", "left")
+        _funnel_stages(e)
+        .filter(F.col("s_ts").isNotNull())
         .select(
             (F.unix_micros("c_ts") - F.unix_micros("s_ts")).alias("sc_us"),
             (F.unix_micros("p_ts") - F.unix_micros("c_ts")).alias("cp_us"),
@@ -1458,11 +1467,12 @@ def q_evt_chain_reorg(spark: SparkSession, sf_dir: str) -> DataFrame:
     event count (the exact rows the listener must retract).
 
     100 TB plan: events collapse to the bounded block rollup first
-    (one partial+final agg on the height key); the walk is
-    _REORG_DEPTH one-row broadcast joins against the PINNED block table (each
-    frontier localCheckpoint'd, the bounded-iteration house pattern of
-    dup_clusters/pagerank); the canonical flag is one hash equi-join.
-    Event rows never join anything — only block-grain rows move.
+    (one partial+final agg on the height key) and the block table is
+    PINNED; the walk is one collect of the confirmation window (at most
+    _REORG_DEPTH+1 heights of blocks) walked on the driver, and the
+    canonical flag is an ``isin`` over the walked hashes on the tip
+    crossJoin (flag_canonical). Event rows never join anything — only
+    block-grain rows move.
     """
     e = load_table(spark, sf_dir, "events")
     blocks = reorg_blocks(e)
@@ -1479,8 +1489,8 @@ def q_evt_chain_reorg(spark: SparkSession, sf_dir: str) -> DataFrame:
 def reorg_blocks(e: DataFrame) -> DataFrame:
     """Synthesize the parent-linked block table (with a 2-deep uncle
     branch) from an events DataFrame — shared by the batch reorg key and
-    the streaming twin's replay builder. Pinned: every consumer walks it
-    repeatedly."""
+    the streaming twin's replay builder. Pinned: flag_canonical reads it
+    twice (the window collect, then the flagged output)."""
     ids = e.select(
         "event_id", F.expr(f"event_id div {_REORG_BLOCK}").alias("height")
     )
@@ -1522,7 +1532,7 @@ def reorg_blocks(e: DataFrame) -> DataFrame:
             )
             .alias("parent_hash"),
         )
-        .localCheckpoint(eager=False)  # referenced by tip + every walk step
+        .localCheckpoint(eager=False)  # read by the window collect + output
     )
 
 
@@ -1531,32 +1541,36 @@ def flag_canonical(blocks: DataFrame) -> DataFrame:
     window; returns blocks + a ``canonical`` flag. ``blocks`` must carry
     (height, hash, parent_hash, n_events); the tip height is derived
     from the SET PASSED IN, so the same walk serves every micro-batch
-    of the streaming twin (where the chain grows batch by batch)."""
+    of the streaming twin (where the chain grows batch by batch).
+
+    The window ``height >= tip_h - _REORG_DEPTH`` (at most D+1 heights
+    of blocks) is collected in ONE job and walked _REORG_DEPTH steps
+    over a ``{hash: parent_hash}`` dict on the driver; the walked hashes
+    then flag the rows through ``isin`` on the tip crossJoin.
+
+    Precondition: a block's parent is one height below it (both block
+    builders, reorg_blocks and the streaming replay, construct blocks
+    that way). Under it, step k of the walk is at height tip_h - k, so
+    the walk never leaves the window within _REORG_DEPTH steps, and
+    blocks below the window are canonical by the height rule: the
+    window walk equals a walk over the whole table."""
     tip_h = blocks.agg(F.max("height").alias("tip_h"))
     b = blocks.crossJoin(F.broadcast(tip_h))
-    frontier = (
-        b.filter(F.col("height") == F.col("tip_h"))
-        .select("hash", "parent_hash", "height")
-        .localCheckpoint(eager=False)
-    )
-    walked = frontier.select("hash")
+    window = b.filter(
+        F.col("height") >= F.col("tip_h") - _REORG_DEPTH
+    ).select("hash", "parent_hash", "height", "tip_h").collect()
+    parent = {r.hash: r.parent_hash for r in window}
+    frontier = {r.hash for r in window if r.height == r.tip_h}
+    walked = set(frontier)
     for _ in range(_REORG_DEPTH):
-        frontier = (
-            blocks.join(
-                F.broadcast(frontier.select(F.col("parent_hash").alias("ph"))),
-                F.col("hash") == F.col("ph"),
-            )
-            .select("hash", "parent_hash", "height")
-            .localCheckpoint(eager=False)
-        )
-        walked = walked.union(frontier.select("hash"))
-    canon = walked.distinct().withColumn("walked", F.lit(True))
-    return b.join(F.broadcast(canon), "hash", "left").select(
+        frontier = {parent[h] for h in frontier} & parent.keys()
+        walked |= frontier
+    return b.select(
         "height",
         "hash",
         "n_events",
         (
-            F.coalesce(F.col("walked"), F.lit(False))
+            F.col("hash").isin(sorted(walked))
             | (F.col("height") < F.col("tip_h") - _REORG_DEPTH)
         ).alias("canonical"),
     )

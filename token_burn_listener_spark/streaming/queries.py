@@ -1002,7 +1002,8 @@ def q_stream_reorg(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream never shuffles event rows; per-batch state is the seen-block
     parquet (idempotent overwrite per batch id, restart-safe via source
     offsets, same recipe as q_stream_upsert_latest); the walk cost is
-    six one-row broadcast joins per micro-batch.
+    one collect of the confirmation window per micro-batch, walked on
+    the driver.
     """
     from token_burn_listener_spark.operators.events import reorg_blocks
 

@@ -9,6 +9,16 @@ normalizations happen here so every operator downstream sees clean types:
   exceed double's 2^53 integer range; SURVEY.md §7.5#2). DuckDB reads the
   same column µs-truncated, so converted values match the oracle exactly.
 
+Each file's schema is inferred once per file version. A plain
+``spark.read.parquet`` launches a schema-inference job on every call, even
+for one file; ``load_table`` keeps the ``StructType`` Spark inferred on the
+first read, keyed by the file's ``(abspath, st_ino, st_size, st_mtime_ns)``,
+and passes it to later reads. Spark still lists the file on every read, so
+only the schema is reused, and a rewritten file gets a new key. Paths must
+be local (``os.stat``); the directory readers that grow between reads
+(``operators/storage.py``, ``streaming/*``) call ``spark.read.parquet``
+themselves.
+
 Scale note: at 100 TB these would be partitioned datasets (events by date),
 and this loader is where partition-pruning-friendly layout assumptions live;
 for the fixtures each table is a single file.
@@ -16,8 +26,11 @@ for the fixtures each table is a single file.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from token_burn_listener_spark.session import configure
 
@@ -34,11 +47,28 @@ TABLE_NAMES = (
     "embeddings",
 )
 
+# (abspath, st_ino, st_size, st_mtime_ns) -> schema Spark inferred for it
+_SCHEMAS: dict[tuple[str, int, int, int], StructType] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, inferring the schema once per file
+    version (module docstring)."""
+    path = os.path.abspath(path)
+    st = os.stat(path)
+    key = (path, st.st_ino, st.st_size, st.st_mtime_ns)
+    schema = _SCHEMAS.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = df.schema
+    return df
+
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table with normalizations applied."""
     configure(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     # Fixture timestamps are naive (no isAdjustedToUTC); if the session

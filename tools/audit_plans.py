@@ -72,7 +72,8 @@ ALLOW_SINGLE_PARTITION = {
     "q_tpch_q22ish",    # [final-agg] 1-row avg account balance
     "q_scan_text",      # [final-agg] round-trip count check
     "q_scan_csv_corrupt",  # [final-agg] quarantine-count summary
-    "q_evt_funnel",     # [final-agg] per-stage 1-row conversion counts
+    "q_evt_funnel",     # [final-agg] one 1-row stage-count agg, inlined
+                        # into the three stage rows
     "q_evt_resample",   # [final-agg] 1-row ts-bounds agg for the grid
     "q_evt_windowed_funnel",  # [final-agg] per-stage deadline counts
     "q_evt_rfm",        # [final-agg] 1-row max-ts + 6-value tercile row
@@ -107,8 +108,8 @@ ALLOW_SINGLE_PARTITION = {
     "q_llm_pq_adc",     # [final-agg] 10-row ADC result + 1-row hit count
     "q_evt_changepoint",  # [rollup-win] cum window over the bounded day
                           # grid + 1-row mean/max aggs
-    "q_evt_chain_reorg",  # [final-agg] 1-row tip-height agg + 1-row walk
-                          # frontiers (bounded-depth chain walk)
+    "q_evt_chain_reorg",  # [final-agg] 1-row tip-height agg (the walk is
+                          # one driver collect of the confirmation window)
     "q_evt_xcorr",        # [final-agg] 1-row grid bounds + 25-row lag dim;
                           # all windows on the calendar-bounded lag table
     "q_evt_profile_similarity",  # [final-agg] 1-row query-id/norm aggs +
@@ -181,6 +182,7 @@ ALLOW_NESTED_LOOP = {
                        # scale brute force (as q_llm_ann_recall)
     "q_evt_changepoint",  # broadcast crossJoins of the 1-row mean + max aggs
     "q_evt_chain_reorg",  # broadcast crossJoin of the 1-row tip-height agg
+                          # (window filter + isin canonical flag on it)
     "q_evt_xcorr",        # broadcast crossJoin of the 25-row lag dim over
                           # the calendar-bounded hourly grid
     "q_evt_profile_similarity",  # broadcast crossJoins of the 1-row
