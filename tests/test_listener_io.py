@@ -9,6 +9,13 @@
 3. **Upsert sink** — ``batch_upsert_writer``'s single-file, rename-onto
    layout: replay-idempotent, temp files invisible, empty batches typed,
    timestamps exact.
+4. **Checkpoint logs** — a feed → sink query writes its offset and commit
+   logs through the FileSystem-based manager, on a handed-over session
+   too, with a ``.crc`` beside every entry; a temp entry left by a crash
+   before its rename is ignored on restart, a torn or bit-flipped entry
+   fails the restart with a checksum error, and a second run on an active
+   checkpoint stops the first (the one-writer precondition of the
+   manager's exists-then-rename).
 """
 
 from __future__ import annotations
@@ -17,14 +24,19 @@ import datetime
 import json
 import os
 import random
+import re
 import struct
+import uuid
 
+from pyspark.errors import StreamingQueryException
 import pytest
 
+from token_burn_listener_spark.session import configure
 from token_burn_listener_spark.sources.feed import (
     _COLS,
     _FeedBatchReader,
     _FeedStreamReader,
+    register_feed_source,
 )
 from token_burn_listener_spark.streaming.replay import (
     batch_upsert_writer,
@@ -278,3 +290,137 @@ def test_sink_timestamp_round_trips_exactly(spark, tmp_path):
     back = read_upsert_target(spark, target)
     assert back.schema["ts"].dataType == df.schema["ts"].dataType
     assert sorted(back.collect()) == sorted(df.collect())
+
+
+# ---------------------------------------------------------------------------
+# 4. checkpoint logs
+# ---------------------------------------------------------------------------
+
+_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+
+
+def _start(spark, feed: str, target: str, cp: str):
+    register_feed_source(spark)
+    src = (
+        spark.readStream.format("event_feed")
+        .option("path", feed)
+        .option("rows_per_batch", "4")
+        .load()
+    )
+    return (
+        src.writeStream.foreachBatch(batch_upsert_writer(target))
+        .option("checkpointLocation", cp)
+        .start()
+    )
+
+
+def _drain_query(spark, feed: str, target: str, cp: str):
+    q = _start(spark, feed, target, cp)
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return q
+
+
+def _log_managers(q) -> list[str]:
+    sq = q._jsq.streamingQuery()
+    return [
+        sq.offsetLog().fileManager().getClass().getSimpleName(),
+        sq.commitLog().fileManager().getClass().getSimpleName(),
+    ]
+
+
+def _target_ids(spark, target: str) -> list[int]:
+    rows = read_upsert_target(spark, target).select("event_id").collect()
+    return sorted(r.event_id for r in rows)
+
+
+def _append_part(feed: str, k: int, ids) -> None:
+    with open(os.path.join(feed, f"part-{k:05d}.jsonl"), "w") as f:
+        f.writelines(_line(i) for i in ids)
+
+
+def test_checkpoint_logs_use_filesystem_manager_with_crc(spark, tmp_path):
+    feed = _feed(tmp_path, [_line(i) for i in range(10)])
+    target = str(tmp_path / "db")
+    q = _drain_query(spark, feed, target, str(tmp_path / "cp"))
+    assert _log_managers(q) == ["FileSystemBasedCheckpointFileManager"] * 2
+    for log in ("offsets", "commits"):
+        names = set(os.listdir(tmp_path / "cp" / log))
+        entries = sorted(n for n in names if n.isdigit())
+        assert entries == ["0", "1", "2"], (log, names)
+        assert {f".{n}.crc" for n in entries} <= names, (log, names)
+    # a handed-over session: the driver built it, configure() runs on it
+    saved = spark.conf.get(_MANAGER_KEY)
+    try:
+        spark.conf.unset(_MANAGER_KEY)
+        configure(spark)
+        q = _drain_query(spark, feed, str(tmp_path / "db2"), str(tmp_path / "cp2"))
+        assert _log_managers(q) == ["FileSystemBasedCheckpointFileManager"] * 2
+    finally:
+        spark.conf.set(_MANAGER_KEY, saved)
+    assert _target_ids(spark, target) == list(range(10))
+
+
+def test_checkpoint_stray_temp_entry_is_ignored(spark, tmp_path):
+    feed = _feed(tmp_path, [_line(i) for i in range(10)])
+    target, cp = str(tmp_path / "db"), str(tmp_path / "cp")
+    _drain_query(spark, feed, target, cp)
+    # a crash between writing entry 3 and renaming it into place
+    with open(os.path.join(cp, "offsets", f".3.{uuid.uuid4()}.tmp"), "w") as f:
+        f.write('v1\n{"batchWatermarkMs":0,"batchTi')
+    _append_part(feed, 1, range(10, 16))
+    _drain_query(spark, feed, target, cp)
+    assert _target_ids(spark, target) == list(range(16))
+
+
+def test_checkpoint_damaged_offset_entry_fails_restart(spark, tmp_path):
+    feed = _feed(tmp_path, [_line(i) for i in range(10)])
+    target, cp = str(tmp_path / "db"), str(tmp_path / "cp")
+    _drain_query(spark, feed, target, cp)
+    before = sorted(map(tuple, read_upsert_target(spark, target).collect()))
+    last = os.path.join(cp, "offsets", "2")
+    with open(last, "rb") as f:
+        entry = f.read()
+    cursor = re.search(rb'"byte": \d+', entry)
+    flipped = bytearray(entry)
+    flipped[cursor.end() - 1] ^= 1  # still valid JSON, a different cursor
+    _append_part(feed, 1, range(10, 16))
+    # torn by a crash mid-write, then one flipped bit in the resume cursor
+    for damaged in (entry[:-3], bytes(flipped)):
+        with open(last, "wb") as f:
+            f.write(damaged)
+        q = _start(spark, feed, target, cp)
+        try:
+            with pytest.raises(
+                StreamingQueryException, match=r"Checksum error: .*offsets/2"
+            ):
+                q.processAllAvailable()
+        finally:
+            q.stop()
+        after = sorted(map(tuple, read_upsert_target(spark, target).collect()))
+        assert after == before
+    # the failed restarts wrote nothing: the repaired log resumes exactly
+    with open(last, "wb") as f:
+        f.write(entry)
+    _drain_query(spark, feed, target, cp)
+    assert _target_ids(spark, target) == list(range(16))
+
+
+def test_checkpoint_second_run_stops_the_first(spark, tmp_path):
+    feed = _feed(tmp_path, [_line(i) for i in range(10)])
+    target, cp = str(tmp_path / "db"), str(tmp_path / "cp")
+    first = _start(spark, feed, target, cp)
+    second = None
+    try:
+        first.processAllAvailable()
+        second = _start(spark, feed, target, cp)
+        assert [first.isActive, second.isActive] == [False, True]
+        _append_part(feed, 1, range(10, 16))
+        second.processAllAvailable()
+    finally:
+        first.stop()
+        if second is not None:
+            second.stop()
+    assert _target_ids(spark, target) == list(range(16))
