@@ -19,10 +19,10 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from token_burn_listener_spark.registry import (
+    _MODULES,
     ORACLES,
     QUERIES,
     load_all_modules,
-    ordered_keys,
 )
 
 
@@ -32,18 +32,23 @@ def entry(spark: SparkSession) -> DataFrame:
     return QUERIES["q_agg_groupby"](spark, "/root/testdata/sf0.001")
 
 
+def _keys() -> list[str]:
+    """Every registered key, grouped by ``registry._MODULES`` order. The
+    sort is stable, so keys of one module stay in source order."""
+    load_all_modules()
+    return sorted(QUERIES, key=lambda k: _MODULES.index(QUERIES[k].__module__))
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2.
 
-    Ordered by registry.DRIVER_ORDER: the driver's correctness run records
-    exactly the first 50 keys, so never-driver-checked keys come first and
-    the set rotates each round (see the DRIVER_ORDER comment).
+    Ordered by module: the listener source, streaming and event keys come
+    first (``registry._MODULES``), each module's keys in source order.
     """
-    load_all_modules()
-    return {k: QUERIES[k] for k in ordered_keys()}
+    return {k: QUERIES[k] for k in _keys()}
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB oracle SQL per key (same column aliases as the Spark query)."""
-    load_all_modules()
-    return {k: ORACLES[k] for k in ordered_keys() if k in ORACLES}
+    """DuckDB oracle SQL per key (same column aliases as the Spark query),
+    in ``queries()`` order."""
+    return {k: ORACLES[k] for k in _keys() if k in ORACLES}

@@ -17,7 +17,7 @@ SF_DIR = os.environ.get("TEST_SF_DIR", "/root/testdata/sf0.001")
 def spark():
     from token_burn_listener_spark.session import get_spark
 
-    s = get_spark("tests", cpus=8, shuffle_partitions=8)
+    s = get_spark("tests", cpus=8)
     s.sparkContext.setLogLevel("ERROR")
     yield s
 

@@ -25,27 +25,25 @@ def test_bench_headline_keys_registered():
     assert not missing, f"bench references unimplemented keys: {missing}"
 
 
-def test_next_driver_window_comment_matches_positions():
-    """Freshness-cycling drift guard (registry.py STANDING INVARIANT):
-    the next-round window written out in the rotation comment must be
-    EXACTLY the canary plus the keys at DRIVER_ORDER positions 50..98 —
-    the slice that becomes the head after the mechanical rotation edit.
-    If an insertion/promotion shifts the queue, this fails until the
-    comment is rewritten, keeping the documented plan machine-true."""
-    import re
+def test_queries_order_is_module_order():
+    """``queries()`` lists every key once, grouped by ``_MODULES`` order and
+    in source order within a module; the oracles follow the same order."""
+    import __spark_entry__ as contract
+    from token_burn_listener_spark.registry import _MODULES
 
-    import token_burn_listener_spark.registry as registry
-
-    src = open(registry.__file__, encoding="utf-8").read()
-    m = re.search(r"r\d\d window \(.*?\n(.*?)\n# ---", src, re.S)
-    assert m, "rotation comment lost its next-window listing"
-    listed = re.findall(r"q_\w+", m.group(1))
-    order = registry.DRIVER_ORDER
-    assert listed == [order[0]] + order[50:99], (
-        "next-window comment diverged from DRIVER_ORDER positions: "
-        f"comment has {len(listed)} keys, first mismatch at "
-        f"{next((i for i, (a, b) in enumerate(zip(listed, [order[0]] + order[50:99])) if a != b), 'length')}"
-    )
+    keys = list(contract.queries())
+    assert sorted(keys) == sorted(QUERIES)
+    modules = [QUERIES[k].__module__ for k in keys]
+    assert set(modules) <= set(_MODULES)
+    ranks = [_MODULES.index(m) for m in modules]
+    assert ranks == sorted(ranks)
+    for m in set(modules):
+        lines = [QUERIES[k].__code__.co_firstlineno for k in keys
+                 if QUERIES[k].__module__ == m]
+        assert lines == sorted(lines), f"{m}: keys out of source order"
+    oracle_keys = list(contract.oracle_sql())
+    assert oracle_keys == [k for k in keys if k in ORACLES]
+    assert "q_stream_listener_e2e" in keys[:50]
 
 
 def test_materialize_ignores_partial_dirs(tmp_path):

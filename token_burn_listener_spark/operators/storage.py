@@ -278,8 +278,8 @@ def q_tpch_q18_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The plain q18 shape at 1000× is dominated by the ~150 M-group
     l_orderkey aggregation shuffle (SCALE.md r9: 464.9 s honest; the
-    shuffle-partition knob made it WORSE). tools/q18_bucketing_probe.py
-    measured the structural fix: lineitem and orders pre-bucketed on the
+    shuffle-partition knob made it WORSE). A bucketing probe (SCALE.md
+    r10) measured the structural fix: lineitem and orders pre-bucketed on the
     order key drop the q18 shape from 3 shuffle exchanges to 0 and
     16.9× wall time at 1000×, for a once-per-ingest layout cost that
     amortizes over every downstream order-keyed query. This key runs the

@@ -9,9 +9,9 @@ Two entry modes:
 - Tests / bench build their own session via ``get_spark()``.
 
 Scale notes (100 TB): AQE stays on so skewed shuffles re-plan at runtime;
-shuffle partitions are sized for the local fixtures here but are a deploy-time
-knob (at 100 TB you want O(data/128MB) partitions or simply AQE's coalescing
-from a high initial count).
+shuffle partitions are sized for the local fixtures here (``RUNTIME_CONFS``)
+but are a deploy-time setting (at 100 TB you want O(data/128MB) partitions
+or simply AQE's coalescing from a high initial count).
 """
 
 from __future__ import annotations
@@ -86,23 +86,20 @@ def configure(spark: SparkSession) -> SparkSession:
 def get_spark(
     app_name: str = "token-burn-listener-spark",
     cpus: str | int | None = None,
-    shuffle_partitions: int | None = None,
 ) -> SparkSession:
     """Build (or fetch) a local session sized for this machine.
 
     ``SPARK_GRAFT_CPUS`` (driver contract) controls local parallelism.
+    Shuffle partitions and AQE come from ``RUNTIME_CONFS``, which
+    ``tables.load_table`` re-applies on every read.
     """
     if cpus is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
         # Arrow for pandas UDF / toPandas hops (B11 operators).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
     )

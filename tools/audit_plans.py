@@ -289,7 +289,8 @@ _FAT_DERIVERS = ("split", "array_sort", "sentences", "sequence", "substring")
 
 def _joins_two_local_relations(opt_plan: str) -> bool:
     """True when any Join node's BOTH immediate children are
-    LocalRelations — the tools/bnlj_probe.py stall shape. Parses the
+    LocalRelations — the nested-loop stall shape recorded in
+    OPTIMIZATION_r14.md §6 (16.4 s vs 0.2–0.6 s controls). Parses the
     optimized logical plan's tree text: each nesting level is one 3-char
     prefix group (':- ', '+- ', ':  ', '   '), so a node's immediate
     children are the next lines one level deeper."""
@@ -406,14 +407,14 @@ def main() -> int:
             problems.append((k, "undocumented cartesian/nested-loop join"))
         # LocalRelation x LocalRelation join: the pathological shape the
         # r13 pq_adc rewrite hit (~15 s nested-loop stall on two tiny
-        # driver-embedded tables; repro: tools/bnlj_probe.py). Flagged
+        # driver-embedded tables; measured in OPTIMIZATION_r14.md §6). Flagged
         # REGARDLESS of the nested-loop allowlist — the allowlist vouches
         # for documented crossJoin cardinalities, not for this shape
         # (r14, VERDICT r13 #8).
         if _joins_two_local_relations(opt):
             problems.append(
                 (k, "join with LocalRelation on BOTH sides (the "
-                    "bnlj_probe stall shape) — pin one side or keep it "
+                    "nested-loop stall shape) — pin one side or keep it "
                     "distributed")
             )
         if any(op in plan for op in PYTHON_OPS) and k not in ALLOW_PYTHON:

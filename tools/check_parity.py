@@ -3,13 +3,22 @@
 Runs every registered query at a scale factor and compares against its
 DuckDB oracle: row count + column names/types + order-insensitive exact
 value comparison (a stricter stand-in for the driver's value hash — if this
-passes, any order-insensitive hash of the same values passes).
+passes, any order-insensitive hash of the same values passes). Keys and
+oracles come through ``__spark_entry__``, in ``queries()`` order, exactly
+as the driver imports them.
 
 Usage:
     python tools/check_parity.py [key_prefix ...]   # default: all keys
-    python tools/check_parity.py --head 50          # simulate driver window
     python tools/check_parity.py --strict-types     # also diff dtype kinds
+    python tools/check_parity.py --vanilla          # driver-shaped session
     SF_DIR=/root/testdata/sf0.01 python tools/check_parity.py q_join
+
+``--vanilla`` runs on a bare ``SparkSession.builder.master(local[N])`` with
+none of this repo's session confs, as the external driver builds it:
+whatever a query needs must be applied at runtime by the package
+(``session.configure`` via ``tables.load_table``). The default session is
+``get_spark``'s, which could mask such a dependency (the nanosAsLong
+lesson).
 
 Strictness matches the driver (r03 lesson): a Spark result column holding
 list/struct cells is a hard FAIL here because the driver's pandas
@@ -29,12 +38,9 @@ import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from token_burn_listener_spark.registry import (
-    QUERIES,
-    ORACLES,
-    load_all_modules,
-    ordered_keys,
-)
+import __spark_entry__ as contract
+from pyspark.sql import SparkSession
+
 from token_burn_listener_spark.session import get_spark
 from token_burn_listener_spark.tables import TABLE_NAMES
 
@@ -155,59 +161,48 @@ def compare(
     return problems
 
 
+def vanilla_spark() -> SparkSession:
+    """The driver's session shape: local master, no repo confs."""
+    spark = (
+        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', 8)}]")
+        .appName("parity-vanilla")
+        .config("spark.ui.enabled", "false")
+        .getOrCreate()
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
 def main() -> int:
-    prefixes = sys.argv[1:]
-    load_all_modules()
-    # DRIVER_ORDER sequence, so a full run exercises the exact ordering the
-    # external driver will use (streaming keys mid-sequence and all).
-    # ``--head N`` limits to the first N keys of that order — the faithful
-    # simulation of the driver's 50-key correctness window.
-    strict_types = False
-    if "--strict-types" in prefixes:
-        strict_types = True
-        prefixes = [p for p in prefixes if p != "--strict-types"]
-    head = None
-    start = 0
-    # ``--head N`` = first N keys; ``--slice A B`` = DRIVER_ORDER positions
-    # A..B-1 (0-based) — the rehearsal for a FUTURE round's window
-    # (e.g. --slice 50 100 = r+1). Flags are parsed wherever they appear;
-    # an unknown --flag is a hard error, never a silent zero-key run.
-    i = 0
-    while i < len(prefixes):
-        tok = prefixes[i]
-        if tok == "--head":
-            head = int(prefixes[i + 1])
-            del prefixes[i : i + 2]
-        elif tok == "--slice":
-            start, head = int(prefixes[i + 1]), int(prefixes[i + 2])
-            del prefixes[i : i + 3]
-        elif tok.startswith("--"):
-            raise SystemExit(f"unknown flag {tok!r}")
-        else:
-            i += 1
-    if prefixes and (start or head is not None):
-        raise SystemExit("--head/--slice index DRIVER_ORDER, not a prefix-"
-                         "filtered list; use one or the other")
+    args = sys.argv[1:]
+    flags = {a for a in args if a.startswith("--")}
+    unknown = flags - {"--strict-types", "--vanilla"}
+    if unknown:
+        # an unknown flag is a hard error, never a silent zero-key run
+        raise SystemExit(f"unknown flag(s): {' '.join(sorted(unknown))}")
+    strict_types = "--strict-types" in flags
+    prefixes = [a for a in args if a not in flags]
+    queries, oracles = contract.queries(), contract.oracle_sql()
     keys = [
-        k
-        for k in ordered_keys()
-        if not prefixes or any(k.startswith(p) for p in prefixes)
-    ][start : head if head is not None else len(QUERIES)]
-    print(f"checking {len(keys)} queries at {SF_DIR}")
-    spark = get_spark("parity-check")
+        k for k in queries if not prefixes or any(k.startswith(p) for p in prefixes)
+    ]
+    vanilla = "--vanilla" in flags
+    session = "vanilla session" if vanilla else "get_spark session"
+    print(f"checking {len(keys)} queries at {SF_DIR} ({session})")
+    spark = vanilla_spark() if vanilla else get_spark("parity-check")
     con = duck_connection(SF_DIR)
     n_pass = n_fail = n_rows_only = 0
     failures = []
     for k in keys:
         t0 = time.time()
         try:
-            sdf = QUERIES[k](spark, SF_DIR).toPandas()
+            sdf = queries[k](spark, SF_DIR).toPandas()
         except Exception:
             n_fail += 1
             failures.append(k)
             print(f"FAIL {k}: spark raised\n{traceback.format_exc()}")
             continue
-        if k not in ORACLES:
+        if k not in oracles:
             # Match the driver's rows>0 smoke semantics: empty output fails.
             if len(sdf) > 0:
                 n_rows_only += 1
@@ -222,7 +217,7 @@ def main() -> int:
                 print(f"FAIL {k}: rows-only query returned 0 rows")
             continue
         try:
-            ddf = con.execute(ORACLES[k]).df()
+            ddf = con.execute(oracles[k]).df()
         except Exception:
             n_fail += 1
             failures.append(k)

@@ -1,20 +1,19 @@
 """One-command verification: every gate in the order the drivers run them.
 
 Chains the seven checks documented in .claude/skills/verify/SKILL.md —
-driver-contract simulation, full DuckDB oracle parity, the next driver
-window rehearsed under a VANILLA session (tools/rehearse_window.py, r6),
-the pytest suite, the physical-plan audit, the bench record, and the
-docs-drift gate — each in a FRESH subprocess (the external drivers are
-separate processes too, and a shared session would mask conf-dependent
-bugs like the nanosAsLong runtime flip). Prints one PASS/FAIL line per
-gate and exits non-zero if any gate fails. Runs are sequential on
-purpose: scratch-dir materialization is safe per-process, not
-cross-process.
+driver-contract simulation, full DuckDB oracle parity on the repo's
+session, the same parity over every key under a VANILLA session
+(``check_parity.py --vanilla``, the driver's session shape), the pytest
+suite, the physical-plan audit, the bench record, and the docs-drift
+gate — each in a FRESH subprocess (the external drivers are separate
+processes too, and a shared session would mask conf-dependent bugs like
+the nanosAsLong runtime flip). Prints one PASS/FAIL line per gate and
+exits non-zero if any gate fails. Runs are sequential on purpose:
+scratch-dir materialization is safe per-process, not cross-process.
 
 Usage: python tools/verify_all.py [--fast]
-  --fast skips the three long gates (full parity, window rehearsal,
-  bench) for a quick inner-loop check; a round must ship only after a
-  FULL run.
+  --fast skips the three long gates (parity, vanilla parity, bench) for
+  a quick inner-loop check; a round must ship only after a FULL run.
 """
 
 from __future__ import annotations
@@ -40,7 +39,7 @@ rows = e.entry(spark).collect()
 assert len(rows) > 0, "entry() returned no rows"
 qs, osql = e.queries(), e.oracle_sql()
 assert set(osql) <= set(qs), "oracle keys not a subset of query keys"
-missing = [k for k in list(qs)[:50] if qs[k] is None]
+missing = [k for k in qs if qs[k] is None]
 assert not missing, missing
 # one events-touching key through the vanilla session: exercises the
 # nanosAsLong runtime conversion the real driver depends on
@@ -81,10 +80,17 @@ def main() -> int:
         gates.insert(
             1, ("parity", [py, "tools/check_parity.py", "--strict-types"], " 0 fail")
         )
-        # the NEXT driver window, exactly as the driver will run it
-        # (vanilla session, contract import) — catches session-conf
-        # dependencies that get_spark-based parity can mask
-        gates.insert(2, ("window", [py, "tools/rehearse_window.py"], " 0 fail"))
+        # every key as the driver runs it (vanilla session, contract
+        # import) — catches session-conf dependencies that get_spark-based
+        # parity can mask
+        gates.insert(
+            2,
+            (
+                "vanilla",
+                [py, "tools/check_parity.py", "--strict-types", "--vanilla"],
+                " 0 fail",
+            ),
+        )
         gates.append(("bench", [py, "bench.py"], '"failed": []'))
     results = [run(name, cmd, expect) for name, cmd, expect in gates]
     n_fail = results.count(False)
