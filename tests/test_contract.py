@@ -160,45 +160,6 @@ def test_feed_sink_append_overwrite_and_fence(spark, sf_dir, tmp_path):
         ).count()
 
 
-def test_preflight_sweep_never_touches_live_jvm_dirs(tmp_path, monkeypatch):
-    """r13 pin for tools/scale_probe.preflight_sweep (VERDICT r12 #8):
-    only Spark scratch dirs that PREDATE the oldest live JVM are swept —
-    a dir a live JVM could own (created after it started) must survive,
-    because an idle JVM holds no open fds there (the fd-only heuristic
-    swept a live parity JVM's blockmgr mid-run; this is its regression
-    test)."""
-    import importlib.util
-    import os
-    import time
-
-    spec = importlib.util.spec_from_file_location(
-        "scale_probe",
-        os.path.join(os.path.dirname(__file__), "..", "tools", "scale_probe.py"),
-    )
-    sp = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(sp)
-
-    old = tmp_path / "blockmgr-dead"
-    new = tmp_path / "blockmgr-live"
-    old.mkdir()
-    new.mkdir()
-    (old / "shuffle_0_0_0.data").write_bytes(b"x" * 128)
-    past = time.time() - 3600
-    os.utime(old, (past, past))
-
-    # a "live JVM" started 10 minutes ago: the hour-old dir is provably
-    # dead, the fresh one could be the live JVM's and must survive
-    monkeypatch.setattr(sp, "_oldest_live_java_start", lambda: time.time() - 600)
-    sp.preflight_sweep(tmp_root=str(tmp_path))
-    assert not old.exists(), "dead-JVM scratch should be swept"
-    assert new.exists(), "possibly-live scratch must never be touched"
-
-    # no JVM at all: everything is sweepable
-    monkeypatch.setattr(sp, "_oldest_live_java_start", lambda: None)
-    sp.preflight_sweep(tmp_root=str(tmp_path))
-    assert not new.exists()
-
-
 def test_load_table_infers_schema_once_per_file_version(
     spark, tmp_path, spark_jobs
 ):
@@ -225,3 +186,51 @@ def test_load_table_infers_schema_once_per_file_version(
     df = load_table(spark, str(tmp_path), "region")
     assert df.columns == ["r_regionkey", "r_name"]
     assert sorted(tuple(r) for r in df.collect()) == [(0, "AFRICA"), (1, "ASIA")]
+
+
+def test_package_code_is_used_by_the_product():
+    """Every top-level function or class of the package, other than the
+    @query keys, is referenced (an AST Name, Attribute or import) from
+    the package, __spark_entry__.py or perfbench/ — no package code is
+    kept alive only for tools or tests."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    pkg = root / "token_burn_listener_spark"
+    sources = [
+        *pkg.rglob("*.py"),
+        root / "__spark_entry__.py",
+        *(root / "perfbench").rglob("*.py"),
+    ]
+
+    def is_query(dec: ast.expr) -> bool:
+        return (
+            isinstance(dec, ast.Call)
+            and isinstance(dec.func, ast.Name)
+            and dec.func.id == "query"
+        )
+
+    defined: list[tuple[str, str]] = []
+    used: set[str] = set()
+    for path in sources:
+        tree = ast.parse(path.read_text(), filename=str(path))
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name):
+                used.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                used.add(node.attr)
+            elif isinstance(node, ast.alias):
+                used.add(node.name.rpartition(".")[2])
+        if pkg in path.parents:
+            defined += [
+                (str(path.relative_to(root)), node.name)
+                for node in tree.body
+                if isinstance(
+                    node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+                )
+                and not any(map(is_query, node.decorator_list))
+            ]
+    assert defined
+    unused = [f"{p}:{name}" for p, name in defined if name not in used]
+    assert not unused, f"package code no product path references: {unused}"

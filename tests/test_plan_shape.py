@@ -14,7 +14,7 @@ a re-inlined copy of the kernel expression.
 
 (q_llm_winnow left this family in r10 — its production kernel is now the
 measured-faster Arrow mapInPandas, which has no Generate to pin; the
-flat-SQL form it replaced stays measurable in tools/winnow_kernel_bench.)
+head-to-head with the flat-SQL form it replaced is in SCALE.md, Round 10.)
 """
 
 from __future__ import annotations
@@ -91,8 +91,8 @@ def test_char_entropy_arrow_kernel_shape(spark, sf_dir):
     # r11: char_entropy's counting runs in an Arrow kernel over
     # (doc_id, text) ONLY; the decimal entropy fold stays JVM-side above
     # it (the hybrid split that keeps the oracle bit-exact). The r10
-    # Generate-barrier test retired with the JVM fold — that form stays
-    # measurable in tools/text_kernel_bench.py.
+    # Generate-barrier test retired with the JVM fold — its head-to-head
+    # with the kernel is in SCALE.md, Round 11.
     _assert_arrow_kernel(
         spark, sf_dir, "q_llm_char_entropy", {"doc_id", "text"}
     )

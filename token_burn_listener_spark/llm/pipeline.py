@@ -45,7 +45,7 @@ def _prep_gate_kernel(it):
 
     The r5–r12 all-JVM trigram form (zip_with over three shifted slices
     + array_distinct, materializing every gram string per doc) is the
-    same machinery tools/text_kernel_bench.py measured at 6.5× the
+    same machinery SCALE.md ("Round 11 runs") measured at 6.5× the
     kernel's cost at 5 M docs for q_llm_repetition (44.7–65.5 s → 6.9 s,
     r11); this key inherits that measured trade, plus the sha256 digest
     folded into the same single pass over the text.

@@ -643,10 +643,9 @@ def q_llm_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     (VERDICT r9 #2 prescribed trying both): at 5 M docs the r9
     aggregate-over-slice HOF form cost 335.7 s, the r10 flat-polynomial
     SQL form (one expanded mod-deferred polynomial per gram, least() over
-    element_at for the window min — kept measurable in
-    tools/winnow_kernel_bench.py) cut it to 95.3 s, and this Arrow kernel
-    to 24.5 s (factor 20.9 vs 44.5 at 1000×), value-identical on all
-    three. Interpreted per-char lambda dispatch is the cost the JVM forms
+    element_at for the window min; SCALE.md, "Round 10 runs") cut it to
+    95.3 s, and this Arrow kernel to 24.5 s (factor 20.9 vs 44.5 at
+    1000×), value-identical on all three. Interpreted per-char lambda dispatch is the cost the JVM forms
     cannot shed — winnowing is ~10·L scalar ops per doc and the
     vectorized numpy pipeline amortizes them to ~5 array ops per doc.
     """

@@ -372,14 +372,6 @@ def _centroid_values(rows):
     ]
 
 
-def _literal_centroids(cents_vals):
-    """[(cluster_id, values)] → [(cluster_id, literal array Column)] for
-    the JVM assignment form."""
-    return [
-        (c, F.array(*[F.lit(float(x)) for x in v])) for c, v in cents_vals
-    ]
-
-
 def _init_centroid_values(e: DataFrame):
     """Deterministic init: the K lowest vec_ids' embeddings as raw
     values (collect bounded to k rows — house collect policy)."""
@@ -387,40 +379,6 @@ def _init_centroid_values(e: DataFrame):
     return [
         (i, [float(x) for x in r["embedding"]]) for i, r in enumerate(init)
     ]
-
-
-def _assign(e: DataFrame, cents: list) -> DataFrame:
-    """Map-side cluster assignment: argmin over [(cluster_id, centroid)]
-    literals.
-
-    d² per centroid is an in-row left fold (index order, matching the
-    oracle's list_sum); the argmin is array_min over (d2, cluster) structs
-    — lexicographic struct ordering gives the deterministic
-    lowest-cluster-wins tiebreak on exact distance ties. The raw float
-    element widens against the double centroid inside the lambda — same
-    (x−y)² arithmetic as the old transform-first form without
-    materializing k double copies of every vector (r9 probe finding).
-    """
-    d2s = [
-        (
-            cid,
-            F.aggregate(
-                F.zip_with(
-                    "embedding",
-                    c,
-                    lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-        )
-        for cid, c in cents
-    ]
-    choice = F.array_min(
-        F.array(*[F.struct(d.alias("d2"), F.lit(cid).alias("cluster"))
-                  for cid, d in d2s])
-    )
-    return e.select("vec_id", "embedding", choice["cluster"].alias("cluster"))
 
 
 def _kmeans_assign_kernel(cids, cent_rows):
@@ -433,17 +391,21 @@ def _kmeans_assign_kernel(cids, cent_rows):
     PASS-THROUGH transport (returned byte-identical, never recomputed),
     so no float computed in Python ever crosses back. The float work to
     pick the argmin uses IEEE-754 basic ops only (subtract, multiply,
-    add) — each correctly rounded, bit-identical across numpy, the JVM,
-    and DuckDB — applied in the JVM/oracle's exact fold order: the
-    explicit per-position loop accumulates d = t0² + t1² + ...
-    left-associated, matching _assign's aggregate(zip_with) fold (the
-    JVM's 0.0 + t0² == t0² exactly; (x−y)² is never −0.0). np.sum is
-    deliberately NOT used (pairwise regrouping). The float32 → float64
-    widening is exact, matching x.cast("double"). Ties break via
-    np.argmin's first-minimum rule over centroids sorted by cluster id
-    == array_min over (d2, cluster) structs == ORDER BY d2, cluster.
-    No libm call runs in Python, so transcendental-drift hazards are
-    structurally absent, not waived."""
+    add), each correctly rounded, in the DuckDB oracle's fold order: the
+    oracle's ``list_sum`` over positions 1..dim is an index-order left
+    fold, and the explicit per-position loop accumulates
+    d = t0² + t1² + ... left-associated the same way (np.sum is
+    deliberately NOT used: its pairwise base case regroups additions).
+    The float32 → float64 widening is exact, matching the oracle's
+    ``embedding::DOUBLE[]`` cast, so every difference t is the same
+    double on both engines. One gap remains: the oracle squares with
+    ``** 2`` (DuckDB's pow), which differs from t·t by 1 ulp on about
+    0.08% of random terms, so a d² can differ by a few ulps and only an
+    argmin between two centroids that close could disagree. Ties break
+    via np.argmin's first-minimum rule over centroids sorted by cluster
+    id == the oracle's ``ORDER BY d2, cluster``. No libm call runs in
+    Python, so transcendental-drift hazards are structurally absent.
+    Parity and test_fuzz_parity's q_llm_kmeans rows check the ids."""
 
     def assign(batches):
         import numpy as np
@@ -485,26 +447,17 @@ def _assign_arrow(e: DataFrame, cents_vals) -> DataFrame:
     )
 
 
-def kmeans_iterate(
-    spark: SparkSession, sf_dir: str, n_iters: int, assign_form: str = "arrow"
-) -> DataFrame:
+def kmeans_iterate(spark: SparkSession, sf_dir: str, n_iters: int) -> DataFrame:
     """Lloyd's k-means, deterministic init (the K lowest vec_ids), returning
     long-form centroids (cluster, pos, c) + member counts after n_iters.
 
-    ``assign_form``: "arrow" (default — the r13 measured promotion,
-    tools/kmeans_kernel_bench.py) runs the assignment through the Arrow
-    kernel; "jvm" keeps the interpreted aggregate/zip_with fold callable
-    so the head-to-head stays reproducible, _pq_codes_jvm-style. Both
-    forms are value-identical at 1x and x100 (asserted by the bench
-    tool: same IEEE fold order, same argmin tie-break)."""
+    Each assignment runs through the Arrow kernel (_kmeans_assign_kernel:
+    the oracle's index-order fold and (d2, cluster) tie-break). It
+    replaced an interpreted aggregate(zip_with) JVM fold in r13; the
+    head-to-head is recorded in SCALE.md, "Round 13 runs", kmeans
+    assignment."""
     e = load_table(spark, sf_dir, "embeddings")
-
-    def do_assign(cents_vals) -> DataFrame:
-        if assign_form == "jvm":
-            return _assign(e, _literal_centroids(cents_vals))
-        return _assign_arrow(e, cents_vals)
-
-    assign = do_assign(_init_centroid_values(e))
+    assign = _assign_arrow(e, _init_centroid_values(e))
     for _ in range(n_iters - 1):
         cent_rows = (
             assign.select(
@@ -514,7 +467,7 @@ def kmeans_iterate(
             .agg(F.avg(F.col("val").cast("double")).alias("c"))
             .collect()  # bounded: k × dim rows — the broadcast step
         )
-        assign = do_assign(_centroid_values(cent_rows))
+        assign = _assign_arrow(e, _centroid_values(cent_rows))
     sizes = assign.groupBy("cluster").agg(F.count("*").alias("n_members"))
     cent = (
         assign.select(
@@ -1439,7 +1392,7 @@ def _pq_codes_arrow(
 
     The collect runs at CONSTRUCTION time (the kernel closure needs the
     codebook values), which is the one Spark job a plan-only consumer —
-    audit_plans, plan-shape tests, probe tools constructing the query
+    audit_plans, plan-shape tests, a benchmark constructing the query
     N times — would otherwise pay per construction. ``cache_key``
     (source path + stat, supplied by the query) memoizes the 8 KiB
     array per fixture so repeated constructions in one process collect
@@ -1462,24 +1415,6 @@ def _pq_codes_arrow(
         .mapInPandas(
             _pq_encode_kernel(cb_np), schema="vec_id bigint, m int, c int"
         )
-    )
-
-
-def _pq_codes_jvm(e: DataFrame, cb: DataFrame, grid: DataFrame) -> DataFrame:
-    """The r11 all-JVM encode (broadcast crossJoin grid + min(struct)
-    partial-agg argmin) — superseded by the Arrow kernel on measurement
-    (tools/pq_kernel_bench.py) but kept callable so the head-to-head
-    stays reproducible, winnow_kernel_bench-style."""
-    dists = (
-        e.filter(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(grid))
-        .crossJoin(F.broadcast(cb))
-        .select("vec_id", "m", "c", _pq_subdist_col("emb", "cemb").alias("d"))
-    )
-    return (
-        dists.groupBy("vec_id", "m")
-        .agg(F.min(F.struct("d", "c")).alias("mc"))
-        .select("vec_id", "m", F.col("mc.c").alias("c"))
     )
 
 
@@ -1579,7 +1514,7 @@ def q_llm_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(F.sequence(F.lit(0), F.lit(_PQ_M - 1))).alias("m")
     )
 
-    # ENCODE (r12 Arrow promotion, measured — tools/pq_kernel_bench.py):
+    # ENCODE (r12 Arrow promotion, measured — SCALE.md, "Round 12 runs"):
     # the encode argmin is a numpy kernel over (vec_id, emb) emitting
     # INTEGER code ids only (see _pq_encode_kernel for the IEEE
     # bit-exactness argument — basic ops in the oracle's fold order, no
@@ -1591,7 +1526,7 @@ def q_llm_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # still pays ~8·16 lambda evals per vector: 1553.3 s at 20 M
     # vectors, SCALE.md r12); the kernel vectorizes the same arithmetic
     # batch-wise — 131.5 s -> 2.77 s encode-only at 2 M vectors (47x,
-    # tools/pq_kernel_bench.py, code sets identical on 16k + 1.6 M
+    # SCALE.md "Round 12 runs", code sets identical on 16k + 1.6 M
     # rows) and 31.6 s for the FULL query at 20 M vectors (vs 1373.3 s
     # r11 / 1553.3 s min(struct)). A fully unrolled in-row JVM argmin
     # was also tried: its 1024-term expression breaks whole-stage

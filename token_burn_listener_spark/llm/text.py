@@ -464,9 +464,8 @@ def q_llm_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     the measured winner over the element_at-in-lambda O(tokens²) form —
     recorded 65.5 s at 5 M docs in r10 (44.7 s re-measured same-session)
     with its interpreted per-gram concat lambdas; the set-of-tuples
-    kernel cuts it to 6.9 s — 6.5× (tools/text_kernel_bench.py,
-    value-identical on all 5000 fixture rows). The JVM form stays
-    measurable in that tool.
+    kernel cuts it to 6.9 s — 6.5× (SCALE.md, "Round 11 runs",
+    value-identical on all 5000 fixture rows).
     """
     d = load_table(spark, sf_dir, "documents")
     counted = d.select("doc_id", "text").mapInPandas(
@@ -1836,8 +1835,8 @@ def q_llm_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     not-length many terms cut it to 16.2 s at 5 M docs — 6.4× vs the
     same-session JVM-fold re-measure of 104.7 s, ~21× vs the r10 SCALE
     row's 350.8 s recorded under round-10 load
-    (tools/text_kernel_bench.py, value-identical on all 5000 fixture
-    rows). The JVM fold form stays measurable in that tool.
+    (SCALE.md, "Round 11 runs", value-identical on all 5000 fixture
+    rows).
     """
     d = load_table(spark, sf_dir, "documents")
     dec = "decimal(28,12)"

@@ -24,17 +24,19 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+# Range partitions of every global rank (session.RUNTIME_CONFS sets the
+# same 32 for spark.sql.shuffle.partitions).
+_RANK_PARTITIONS = 32
 
-def global_row_number(
-    df: DataFrame, order: list[Column], out_col: str, num_partitions: int = 32
-) -> DataFrame:
+
+def global_row_number(df: DataFrame, order: list[Column], out_col: str) -> DataFrame:
     """Exact global row_number over a total order, without a global window.
 
     ``order`` MUST be a total order (include a unique key): equal keys
     split across range-partition boundaries would otherwise make
     offset+local-rank ambiguous.
     """
-    ranged = df.repartitionByRange(num_partitions, *order)
+    ranged = df.repartitionByRange(_RANK_PARTITIONS, *order)
     with_pid = ranged.withColumn("_pid", F.spark_partition_id())
     local = with_pid.withColumn(
         "_lrank", F.row_number().over(Window.partitionBy("_pid").orderBy(*order))

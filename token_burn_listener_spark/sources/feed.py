@@ -408,17 +408,21 @@ class EventFeedDataSource(DataSource):
         return _FeedWriter(self.options, overwrite)
 
 
-def ensure_feed(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the events fixture as a single JSONL feed file."""
-    ev = load_table(spark, sf_dir, "events").select(
+def _feed_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The events fixture in the feed's row shape (``FEED_SCHEMA``)."""
+    return load_table(spark, sf_dir, "events").select(
         "event_id",
         F.unix_micros("ts").alias("ts_us"),
         "user_id",
         "event_type",
         "value",
     )
+
+
+def ensure_feed(spark: SparkSession, sf_dir: str) -> str:
+    """Materialize the events fixture as a single JSONL feed file."""
     return materialize(
-        ev,
+        _feed_rows(spark, sf_dir),
         scratch_dir(sf_dir, "events_feed", source=f"{sf_dir}/events.parquet"),
         lambda d, p: d.coalesce(1).write.json(p),
     )
@@ -521,15 +525,9 @@ def q_src_python_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_feed_source(spark)
     target = fresh_run_dir("feed_sink")
     os.makedirs(target, exist_ok=True)
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        F.unix_micros("ts").alias("ts_us"),
-        "user_id",
-        "event_type",
-        "value",
-    )
     (
-        ev.repartition(4)
+        _feed_rows(spark, sf_dir)
+        .repartition(4)
         .write.format("event_feed")
         .option("path", target)
         .mode("append")
@@ -565,8 +563,6 @@ def q_stream_listener_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     replaced by an atomic rename, is the idempotent foreachBatch shape, so
     a replayed epoch lands on the same path instead of duplicating.
     """
-    import shutil
-
     from token_burn_listener_spark.scratch import fresh_run_dir
     from token_burn_listener_spark.streaming.replay import (
         batch_upsert_writer,
@@ -576,36 +572,23 @@ def q_stream_listener_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_feed_source(spark)
     base = fresh_run_dir("listener_e2e")
     feed, target, cp = f"{base}/feed", f"{base}/db", f"{base}/cp"
-    os.makedirs(feed, exist_ok=True)
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        F.unix_micros("ts").alias("ts_us"),
-        "user_id",
-        "event_type",
-        "value",
-    )
+    ev = _feed_rows(spark, sf_dir)
     n_events = ev.count()
 
-    def publish(phase_df: DataFrame, part_name: str) -> None:
-        tmp = f"{base}/tmp_{part_name}"
-        phase_df.coalesce(1).write.json(tmp)
-        src_file = glob.glob(os.path.join(tmp, "part-*"))[0]
-        # r13 (ADVICE r12): stage-then-rename INSIDE the feed dir so the
-        # part becomes visible atomically — a plain copy is not atomic,
-        # and once the first commit's fence exists a concurrent reader
-        # would otherwise pass the fence check while the second part is
-        # half-copied (the exact state the fence exists to reject). The
-        # staging name must not match the readers' part-* glob.
-        staged = os.path.join(feed, f"_incoming_{part_name}")
-        shutil.copy(src_file, staged)
-        os.rename(staged, os.path.join(feed, part_name))
-        shutil.rmtree(tmp)
-        # fence each append-only publication: readers reject unfenced
-        # dirs since the r12 review (the provider's commit marker)
-        with open(os.path.join(feed, "_FEEDCOMMIT"), "w") as f:
-            json.dump({"published": part_name}, f)
-
-    def drain() -> None:
+    # phase 0: half the feed arrives, the listener drains it, then "crashes";
+    # phase 1: the rest arrives, and a NEW query on the SAME checkpoint
+    # resumes from the committed cursor and must deliver ONLY the new lines.
+    # Each phase publishes through the feed's own sink: its parts appear
+    # all-or-nothing after the existing ones, fenced by _FEEDCOMMIT (the
+    # provider's commit marker).
+    for phase in (0, 1):
+        (
+            ev.filter(F.col("event_id") % 2 == phase)
+            .write.format("event_feed")
+            .option("path", feed)
+            .mode("append")
+            .save()
+        )
         src = (
             spark.readStream.format("event_feed")
             .option("path", feed)
@@ -628,14 +611,6 @@ def q_stream_listener_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             q.processAllAvailable()
         finally:
             q.stop()
-
-    # phase 1: half the feed arrives, the listener drains it, then "crashes"
-    publish(ev.filter(F.col("event_id") % 2 == 0), "part-000.json")
-    drain()
-    # phase 2: the rest arrives; a NEW query on the SAME checkpoint resumes
-    # from the committed cursor and must deliver ONLY the new lines
-    publish(ev.filter(F.col("event_id") % 2 == 1), "part-001.json")
-    drain()
     out = read_upsert_target(spark, target)
     n_out, n_distinct = out.count(), out.select("event_id").distinct().count()
     if n_out != n_distinct:

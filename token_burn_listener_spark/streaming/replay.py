@@ -166,13 +166,11 @@ def read_upsert_target(spark: SparkSession, target: str) -> DataFrame:
     return spark.read.parquet(target).drop("batch")
 
 
-def run_foreach_upsert(
-    sdf: DataFrame, target: str, checkpoint: str, output_mode: str = "append"
-) -> None:
+def run_foreach_upsert(sdf: DataFrame, target: str, checkpoint: str) -> None:
     """Run a stream through the exactly-once foreachBatch sink to completion."""
     q = (
         sdf.writeStream.foreachBatch(batch_upsert_writer(target))
-        .outputMode(output_mode)
+        .outputMode("append")
         .trigger(availableNow=True)
         .option("checkpointLocation", checkpoint)
         .start()

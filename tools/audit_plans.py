@@ -227,32 +227,32 @@ ALLOW_PYTHON = {
     "q_llm_winnow",      # mapInPandas numpy kernel, promoted on MEASUREMENT
                          # (r10, VERDICT r9 #2): 24.5 s vs the best JVM
                          # form's 95.3 s at 5 M docs, value-identical —
-                         # tools/winnow_kernel_bench.py keeps both honest
+                         # SCALE.md, Round 10
     "q_llm_char_entropy",  # mapInPandas INTEGER-ONLY counting kernel
                            # (r11, VERDICT r10 #2): 16.2 s vs the JVM
                            # fold's 104.7 s at 5 M docs; all float/decimal
-                           # ops stay JVM-side — tools/text_kernel_bench.py
+                           # ops stay JVM-side — SCALE.md, Round 11
     "q_llm_repetition",  # mapInPandas INTEGER-ONLY trigram counts (r11,
                          # VERDICT r10 #3): 6.9 s vs 44.7 s at 5 M docs;
-                         # ratio/round stay JVM-side — text_kernel_bench.py
+                         # ratio/round stay JVM-side — SCALE.md, Round 11
     "q_llm_pq_adc",      # mapInPandas encode kernel emitting INTEGER code
                          # ids only (r12, VERDICT r11 #1c): IEEE basic ops
                          # in the oracle's fold order, no libm; measured
                          # head-to-head vs the JVM min(struct) form in
-                         # tools/pq_kernel_bench.py
+                         # SCALE.md, Round 12
     "q_llm_training_manifest",  # composes pack_sequences' fold — same Arrow
                                 # contract, same skinny (id, source, n) rows
     "q_llm_kmeans",      # mapInPandas assignment kernel emitting the INTEGER
                          # cluster id (r13, VERDICT r12 #3): embedding is
                          # pass-through transport, IEEE basic ops in the
-                         # JVM fold order, ~2x at 1000x — measured
+                         # oracle's fold order, ~2x at 1000x — measured
                          # head-to-head vs the interpreted aggregate/zip_with
-                         # form in tools/kmeans_kernel_bench.py
+                         # form in SCALE.md, Round 13
     "q_llm_corpus_prep",  # mapInPandas INTEGER/HASH gate kernel (r13
                           # optimization): token/trigram counts + sha256
                           # per doc — the same measured trade as
                           # q_llm_repetition's kernel (6.5x at 5 M docs,
-                          # tools/text_kernel_bench.py); rep ratio and all
+                          # SCALE.md, Round 11); rep ratio and all
                           # gate floats stay JVM-side
     # r14 (VERDICT r13 #1): the MinHash signature build is one Arrow
     # kernel (_minhash_sigs) emitting INTEGER sig columns only — bit-
