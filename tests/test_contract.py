@@ -18,11 +18,16 @@ def test_key_naming_convention():
     assert all(k.startswith("q_") for k in QUERIES)
 
 
-def test_bench_headline_keys_registered():
-    import bench
+def test_sf01_gate_keys_registered():
+    """Every ``parity-sf0.1`` gate key is registered, and as a
+    ``check_parity.py`` prefix selects exactly that one key: a prefix
+    matching nothing would check 0 keys and still print ``0 fail``."""
+    from tools.verify_all import SF01_KEYS
 
-    missing = [k for k in bench.HEADLINE_KEYS if k not in QUERIES]
-    assert not missing, f"bench references unimplemented keys: {missing}"
+    missing = [k for k in SF01_KEYS if k not in QUERIES]
+    assert not missing, f"parity-sf0.1 gate names unregistered keys: {missing}"
+    selects = {p: [k for k in QUERIES if k.startswith(p)] for p in SF01_KEYS}
+    assert all(ks == [p] for p, ks in selects.items()), selects
 
 
 def test_queries_order_is_module_order():

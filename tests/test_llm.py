@@ -294,6 +294,39 @@ def test_kmeans_wcss_monotone_descent(spark, sf_dir):
     assert w1 > 0
 
 
+def test_kmeans_oracle_distance_matches_kernel_fold_bitwise():
+    """The q_llm_kmeans oracle's squared distance (_sq_l2_sql in DuckDB)
+    equals the assignment kernel's left fold (_sq_l2_fold) bit for bit
+    on 20k random float32 vectors, so no near-tie argmin can differ."""
+    import duckdb
+    import numpy as np
+    import pyarrow as pa
+
+    from token_burn_listener_spark.llm.similarity import _sq_l2_fold, _sq_l2_sql
+
+    rng = np.random.default_rng(0)
+    x = rng.standard_normal((20_000, 64)).astype(np.float32)
+    c = rng.standard_normal((4, 64))
+    vecs = pa.table(  # noqa: F841  (scanned by DuckDB by name)
+        {
+            "vec_id": np.arange(len(x)),
+            "v": pa.array(list(x), type=pa.list_(pa.float32())),
+        }
+    )
+    cents = pa.table(  # noqa: F841
+        {"cluster": np.arange(len(c)), "v": pa.array(list(c))}
+    )
+    got = duckdb.sql(
+        f"""WITH e AS (SELECT vec_id, v::DOUBLE[] AS v FROM vecs)
+        SELECT {_sq_l2_sql("e.v", "k.v")} AS d2
+        FROM e CROSS JOIN cents k ORDER BY e.vec_id, k.cluster"""
+    ).fetchnumpy()["d2"]
+    want = _sq_l2_fold()(x.astype(np.float64), c).ravel()
+    assert got.shape == want.shape
+    n_diff = int((got.view(np.int64) != want.view(np.int64)).sum())
+    assert n_diff == 0, f"{n_diff} of {want.size} distances differ"
+
+
 def test_knn_classify_votes_are_bounded(spark, sf_dir):
     """Majority vote of 5 neighbors: 1 <= n_votes <= 5, every probe id
     classified, predicted labels drawn from the real label domain."""

@@ -22,12 +22,13 @@ from pyspark.sql import functions as F
 from token_burn_listener_spark.registry import QUERIES, load_all_modules
 from token_burn_listener_spark.scratch import fresh_run_dir
 from token_burn_listener_spark.streaming.replay import (
+    batch_upsert_writer,
     ensure_events_replay,
     ensure_events_replay_multi,
     events_df,
     read_events_stream,
     read_upsert_target,
-    run_foreach_upsert,
+    run_foreach_batch,
     run_to_memory,
 )
 
@@ -204,12 +205,13 @@ def test_foreachbatch_upsert_idempotent(spark, sf_dir):
     base = fresh_run_dir("idem")
     target, cp = f"{base}/target", f"{base}/cp"
     replay = ensure_events_replay(spark, sf_dir)
-    run_foreach_upsert(read_events_stream(spark, replay), target, cp)
+    upsert = batch_upsert_writer(target)
+    run_foreach_batch(read_events_stream(spark, replay), upsert, cp)
     first = read_upsert_target(spark, target).count()
     # restart: no new data → no-op; then redeliver the same stream from a
     # FRESH checkpoint (same batch ids) → overwrites with identical content.
-    run_foreach_upsert(read_events_stream(spark, replay), target, cp)
-    run_foreach_upsert(read_events_stream(spark, replay), target, f"{base}/cp2")
+    run_foreach_batch(read_events_stream(spark, replay), upsert, cp)
+    run_foreach_batch(read_events_stream(spark, replay), upsert, f"{base}/cp2")
     assert read_upsert_target(spark, target).count() == first == events_df(
         spark, sf_dir
     ).count()
@@ -431,10 +433,6 @@ def test_upsert_latest_independent_of_replay_order(
     permutation equals the batch latest-per-user table."""
     from pyspark.sql.window import Window
 
-    from token_burn_listener_spark.streaming.replay import (
-        read_upsert_target,
-    )
-
     w = Window.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
     batch = (
         events_df(spark, sf_dir)
@@ -462,15 +460,11 @@ def test_upsert_latest_independent_of_replay_order(
             )
             latest.write.mode("overwrite").parquet(f"{target}/batch={batch_id}")
 
-        q = (
-            read_events_stream(spark, replay, maxFilesPerTrigger="1")
-            .writeStream.foreachBatch(delta_writer)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", cp)
-            .start()
+        run_foreach_batch(
+            read_events_stream(spark, replay, maxFilesPerTrigger="1"),
+            delta_writer,
+            cp,
         )
-        q.awaitTermination()
         compacted = (
             read_upsert_target(spark, target)
             .withColumn("rn", F.row_number().over(w))

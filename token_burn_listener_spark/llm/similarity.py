@@ -381,6 +381,32 @@ def _init_centroid_values(e: DataFrame):
     ]
 
 
+def _sq_l2_fold():
+    """Returns sq_l2(X, C): squared L2 from every row of X to every row of
+    C (float64 arrays), d = t0·t0 + t1·t1 + ... left-associated in
+    position order — the IEEE op sequence of the oracle's _sq_l2_sql.
+    A factory so kernels ship it by value: Python workers need not be
+    able to import this package."""
+
+    def sq_l2(X, C):
+        t = X[:, None, 0] - C[None, :, 0]
+        d = t * t
+        for p in range(1, X.shape[1]):
+            t = X[:, None, p] - C[None, :, p]
+            d = d + t * t
+        return d
+
+    return sq_l2
+
+
+def _sq_l2_sql(a: str, b: str) -> str:
+    """DuckDB twin of _sq_l2_fold over DOUBLE[] lists a and b: list_sum is
+    an index-order left fold, and each term multiplies the difference by
+    itself (``** 2`` is pow, which differs from t·t on some terms)."""
+    t = f"({a}[p] - {b}[p])"
+    return f"list_sum([{t} * {t} FOR p IN range(1, len({a}) + 1)])"
+
+
 def _kmeans_assign_kernel(cids, cent_rows):
     """Arrow assignment-kernel factory: batches of (vec_id, embedding) →
     (vec_id, cluster, embedding) with cluster the argmin centroid id over
@@ -393,19 +419,18 @@ def _kmeans_assign_kernel(cids, cent_rows):
     pick the argmin uses IEEE-754 basic ops only (subtract, multiply,
     add), each correctly rounded, in the DuckDB oracle's fold order: the
     oracle's ``list_sum`` over positions 1..dim is an index-order left
-    fold, and the explicit per-position loop accumulates
-    d = t0² + t1² + ... left-associated the same way (np.sum is
-    deliberately NOT used: its pairwise base case regroups additions).
-    The float32 → float64 widening is exact, matching the oracle's
-    ``embedding::DOUBLE[]`` cast, so every difference t is the same
-    double on both engines. One gap remains: the oracle squares with
-    ``** 2`` (DuckDB's pow), which differs from t·t by 1 ulp on about
-    0.08% of random terms, so a d² can differ by a few ulps and only an
-    argmin between two centroids that close could disagree. Ties break
+    fold, and _sq_l2_fold's sq_l2 accumulates d = t0·t0 + t1·t1 + ...
+    left-associated the same way (np.sum is deliberately NOT used: its
+    pairwise base case regroups additions). The float32 → float64
+    widening is exact, matching the oracle's ``embedding::DOUBLE[]``
+    cast, so every difference t is the same double on both engines
+    (tests/test_llm.py pins the two folds bit for bit). Ties break
     via np.argmin's first-minimum rule over centroids sorted by cluster
     id == the oracle's ``ORDER BY d2, cluster``. No libm call runs in
     Python, so transcendental-drift hazards are structurally absent.
     Parity and test_fuzz_parity's q_llm_kmeans rows check the ids."""
+
+    sq_l2 = _sq_l2_fold()
 
     def assign(batches):
         import numpy as np
@@ -419,15 +444,10 @@ def _kmeans_assign_kernel(cids, cent_rows):
             X = np.stack(pdf["embedding"].to_numpy()).astype(
                 np.float64, copy=False
             )
-            t = X[:, None, 0] - C[None, :, 0]
-            d = t * t
-            for p in range(1, X.shape[1]):
-                t = X[:, None, p] - C[None, :, p]
-                d = d + t * t
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"],
-                    "cluster": cid_arr[np.argmin(d, axis=1)],
+                    "cluster": cid_arr[np.argmin(sq_l2(X, C), axis=1)],
                     "embedding": pdf["embedding"],
                 }
             )
@@ -493,9 +513,7 @@ def kmeans_iterate(spark: SparkSession, sf_dir: str, n_iters: int) -> DataFrame:
       FROM e ORDER BY vec_id LIMIT {_KMEANS_K}
     ),
     d1 AS (
-      SELECT e.vec_id, i.cluster,
-             list_sum([(e.v[p] - i.v[p]) ** 2
-                       FOR p IN range(1, len(e.v) + 1)]) AS d2
+      SELECT e.vec_id, i.cluster, {_sq_l2_sql("e.v", "i.v")} AS d2
       FROM e CROSS JOIN init i
     ),
     a1 AS (
@@ -514,9 +532,7 @@ def kmeans_iterate(spark: SparkSession, sf_dir: str, n_iters: int) -> DataFrame:
       ) GROUP BY cluster
     ),
     d2_ AS (
-      SELECT e.vec_id, c1.cluster,
-             list_sum([(e.v[p] - c1.v[p]) ** 2
-                       FOR p IN range(1, len(e.v) + 1)]) AS d2
+      SELECT e.vec_id, c1.cluster, {_sq_l2_sql("e.v", "c1.v")} AS d2
       FROM e CROSS JOIN c1
     ),
     a2 AS (

@@ -47,15 +47,6 @@ def _plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().explainString(jvm_mode)
 
 
-# Per-process record of every _ensure_bucketed layout this process touched:
-# scratch key -> "cold_built" (this process paid the bucketBy write) or
-# "warm_attached" (files existed; only the catalog DDL ran). bench.py copies
-# it into the JSON fingerprint so every BENCH number self-declares its
-# layout state (VERDICT r13 #3 — a bucketed-key line on a warm box must not
-# read as the cold cost, or vice versa).
-LAYOUT_STATE: dict[str, str] = {}
-
-
 def _ensure_bucketed(
     spark: SparkSession,
     sf_dir: str,
@@ -108,15 +99,8 @@ def _ensure_bucketed(
     # prefix+table but clustering on different columns would otherwise
     # collide in tableExists and silently reuse the wrong layout
     name = f"{prefix}_{table}_{key}_" + path.split("/")[-2]
-    state_key = f"bkt{n_buckets}_{table}_{key}"
     if spark.catalog.tableExists(name):
         return name
-    LAYOUT_STATE.setdefault(
-        state_key,
-        "warm_attached"
-        if os.path.exists(os.path.join(path, "_SUCCESS"))
-        else "cold_built",
-    )
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         if os.path.exists(path):  # partial dir from a crashed writer
             shutil.rmtree(path)

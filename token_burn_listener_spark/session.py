@@ -6,7 +6,7 @@ Two entry modes:
   ``queries()`` callables). We cannot rebuild it, so every conf we need MUST
   be settable at runtime — ``configure(spark)`` applies them via
   ``spark.conf.set`` (verified to work on a live session, SURVEY.md §7.5#1).
-- Tests / bench build their own session via ``get_spark()``.
+- Tests and tools build their own session via ``get_spark()``.
 
 Scale notes (100 TB): AQE stays on so skewed shuffles re-plan at runtime;
 shuffle partitions are sized for the local fixtures here (``RUNTIME_CONFS``)

@@ -61,6 +61,7 @@ from pyspark.sql.datasource import (
 
 from token_burn_listener_spark.registry import query
 from token_burn_listener_spark.scratch import materialize, scratch_dir
+from token_burn_listener_spark.streaming.replay import nonempty_batches
 from token_burn_listener_spark.tables import load_table
 
 FEED_SCHEMA = (
@@ -500,7 +501,7 @@ def q_src_python_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.processAllAvailable()
     finally:
         q.stop()
-    n_batches = sum(1 for p in q.recentProgress if p.numInputRows > 0)
+    n_batches = nonempty_batches(q)
     if n_batches < 4:
         raise AssertionError(
             f"cursor rate limit not applied: {n_batches} non-empty"

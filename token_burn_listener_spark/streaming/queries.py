@@ -42,12 +42,13 @@ from pyspark.sql.streaming.state import GroupStateTimeout
 from token_burn_listener_spark.registry import query
 from token_burn_listener_spark.scratch import fresh_run_dir
 from token_burn_listener_spark.streaming.replay import (
+    batch_upsert_writer,
     ensure_events_replay,
     ensure_events_replay_multi,
     events_df,
     read_events_stream,
     read_upsert_target,
-    run_foreach_upsert,
+    run_foreach_batch,
     run_to_memory,
 )
 
@@ -275,7 +276,7 @@ def _two_phase_windows(
             .groupBy(F.window("ts", "1 hour").alias("w"), *group_cols)
             .agg(F.count("*").alias("n"))
         )
-        run_foreach_upsert(agg.select(*out_cols), target, cp)
+        run_foreach_batch(agg.select(*out_cols), batch_upsert_writer(target), cp)
 
     run_once()
     ev.filter(F.col("ts") <= t0).coalesce(1).write.mode("append").parquet(replay)
@@ -559,13 +560,12 @@ def q_stream_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = fresh_run_dir("feb")
     target, cp = f"{base}/target", f"{base}/cp"
     replay = ensure_events_replay(spark, sf_dir)
-    run_foreach_upsert(read_events_stream(spark, replay), target, cp)
+    upsert = batch_upsert_writer(target)
+    run_foreach_batch(read_events_stream(spark, replay), upsert, cp)
     # Restart with the same checkpoint: no new data → no-op (A9 retry).
-    run_foreach_upsert(read_events_stream(spark, replay), target, cp)
+    run_foreach_batch(read_events_stream(spark, replay), upsert, cp)
     # Redeliver batch 0 manually: overwrite with identical content → no-op.
-    from token_burn_listener_spark.streaming.replay import batch_upsert_writer
-
-    batch_upsert_writer(target)(events_df(spark, sf_dir), 0)
+    upsert(events_df(spark, sf_dir), 0)
     return read_upsert_target(spark, target)
 
 
@@ -584,12 +584,13 @@ def q_stream_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = events_df(spark, sf_dir)
     base = fresh_run_dir("ckpt")
     replay, target, cp = f"{base}/replay", f"{base}/target", f"{base}/cp"
+    upsert = batch_upsert_writer(target)
     ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.parquet(replay)
-    run_foreach_upsert(read_events_stream(spark, replay), target, cp)
+    run_foreach_batch(read_events_stream(spark, replay), upsert, cp)
     ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode("append").parquet(
         replay
     )
-    run_foreach_upsert(read_events_stream(spark, replay), target, cp)
+    run_foreach_batch(read_events_stream(spark, replay), upsert, cp)
     return read_upsert_target(spark, target)
 
 
@@ -639,7 +640,7 @@ def q_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("p.event_id").alias("purchase_id"),
             F.col("v.event_id").alias("view_id"),
         )
-        run_foreach_upsert(joined, target, cp)
+        run_foreach_batch(joined, batch_upsert_writer(target), cp)
 
     run_once()
     ev.filter(F.col("ts") >= mx).coalesce(1).write.mode("append").parquet(replay)
@@ -731,15 +732,7 @@ def q_stream_upsert_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         latest.write.mode("overwrite").parquet(f"{target}/batch={batch_id}")
 
-    q = (
-        stream.writeStream.foreachBatch(delta_writer)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", cp)
-        .start()
-    )
-    q.awaitTermination()
-    n_batches = sum(1 for p in q.recentProgress if p.numInputRows > 0)
+    n_batches = run_foreach_batch(stream, delta_writer, cp)
     if n_batches < 4:
         raise AssertionError(
             f"rate limit not applied: {n_batches} non-empty micro-batches"
@@ -819,7 +812,7 @@ def q_stream_chained(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = daily.select(
             F.col("w2.end").alias("de"), "n_events", "n_type_hours"
         )
-        run_foreach_upsert(out, target, cp)
+        run_foreach_batch(out, batch_upsert_writer(target), cp)
 
     run_once()
     ev.filter(F.col("ts") <= t0).coalesce(1).write.mode("append").parquet(replay)
@@ -1034,14 +1027,7 @@ def q_stream_reorg(spark: SparkSession, sf_dir: str) -> DataFrame:
             "height long, branch string, hash string, "
             "parent_hash string, n_events long"
         ).parquet(replay)
-        q = (
-            stream.writeStream.foreachBatch(step)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", cp)
-            .start()
-        )
-        q.awaitTermination()
+        run_foreach_batch(stream, step, cp)
 
     phase1.select(*out_cols).coalesce(1).write.parquet(replay)
     run_once()
@@ -1149,14 +1135,7 @@ def q_stream_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def run_once() -> None:
         stream = spark.readStream.schema("event_id long").parquet(replay)
-        q = (
-            stream.writeStream.foreachBatch(step)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", cp)
-            .start()
-        )
-        q.awaitTermination()
+        run_foreach_batch(stream, step, cp)
 
     holey = e.filter(F.col("event_id") % _GAP_DROP_MOD != 0)
     missing = e.filter(F.col("event_id") % _GAP_DROP_MOD == 0)

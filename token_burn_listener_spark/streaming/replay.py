@@ -46,6 +46,7 @@ import uuid
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import StreamingQuery
 
 from token_burn_listener_spark.scratch import fresh_run_dir, materialize, scratch_dir
 from token_burn_listener_spark.tables import load_table
@@ -137,7 +138,7 @@ def run_to_memory(
     )
     q.awaitTermination()
     if min_batches is not None:
-        n = sum(1 for p in q.recentProgress if p.numInputRows > 0)
+        n = nonempty_batches(q)
         if n < min_batches:
             raise AssertionError(
                 f"rate limit not applied: {n} non-empty micro-batches,"
@@ -166,13 +167,22 @@ def read_upsert_target(spark: SparkSession, target: str) -> DataFrame:
     return spark.read.parquet(target).drop("batch")
 
 
-def run_foreach_upsert(sdf: DataFrame, target: str, checkpoint: str) -> None:
-    """Run a stream through the exactly-once foreachBatch sink to completion."""
+def nonempty_batches(q: StreamingQuery) -> int:
+    """Micro-batches of ``q`` so far that read at least one row."""
+    return sum(1 for p in q.recentProgress if p.numInputRows > 0)
+
+
+def run_foreach_batch(
+    sdf: DataFrame, step: Callable[[DataFrame, int], None], checkpoint: str
+) -> int:
+    """Drain a stream (availableNow) through the foreachBatch function
+    ``step``; returns the number of non-empty micro-batches."""
     q = (
-        sdf.writeStream.foreachBatch(batch_upsert_writer(target))
+        sdf.writeStream.foreachBatch(step)
         .outputMode("append")
         .trigger(availableNow=True)
         .option("checkpointLocation", checkpoint)
         .start()
     )
     q.awaitTermination()
+    return nonempty_batches(q)

@@ -4,16 +4,18 @@ Chains the seven checks documented in .claude/skills/verify/SKILL.md —
 driver-contract simulation, full DuckDB oracle parity on the repo's
 session, the same parity over every key under a VANILLA session
 (``check_parity.py --vanilla``, the driver's session shape), the pytest
-suite, the physical-plan audit, the bench record, and the docs-drift
-gate — each in a FRESH subprocess (the external drivers are separate
-processes too, and a shared session would mask conf-dependent bugs like
-the nanosAsLong runtime flip). Prints one PASS/FAIL line per gate and
-exits non-zero if any gate fails. Runs are sequential on purpose:
-scratch-dir materialization is safe per-process, not cross-process.
+suite, the physical-plan audit, the docs-drift gate, and the same parity
+over the ``SF01_KEYS`` at sf0.1 — each in a FRESH subprocess (the
+external drivers are separate processes too, and a shared session would
+mask conf-dependent bugs like the nanosAsLong runtime flip). Prints one
+PASS/FAIL line per gate and exits non-zero if any gate fails. Runs are
+sequential on purpose: scratch-dir materialization is safe per-process,
+not cross-process.
 
 Usage: python tools/verify_all.py [--fast]
-  --fast skips the three long gates (parity, vanilla parity, bench) for
-  a quick inner-loop check; a round must ship only after a FULL run.
+  --fast skips the three long gates (parity, vanilla parity and
+  parity-sf0.1) for a quick inner-loop check; a round must ship only
+  after a FULL run.
 """
 
 from __future__ import annotations
@@ -25,6 +27,36 @@ import sys
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# the keys whose plans earlier rounds tuned at sf0.1
+SF01_KEYS = [
+    "q_agg_groupby",
+    "q_join_star",
+    "q_agg_time_rollup",
+    "q_stream_tumbling",
+    "q_win_topk_group",
+    "q_agg_count_distinct",
+    "q_llm_exact_dedup",
+    "q_llm_corpus_prep",
+    "q_evt_sessionize",
+    "q_llm_decontaminate",
+    "q_cdc_merge",
+    "q_llm_bigram_lm",
+    "q_join_bloom",
+    "q_llm_cms_topk",
+    "q_evt_rfm",
+    "q_llm_kl_divergence",
+    "q_llm_pq_adc",
+    "q_evt_survival",
+    "q_stream_upsert_latest",
+    "q_llm_span_removal",
+    "q_tpch_q21ish",
+    "q_llm_winnow",
+    "q_llm_char_entropy",
+    "q_llm_repetition",
+    "q_tpch_q18_bucketed",
+    "q_llm_minhash_bucketed",
+]
 
 _DRIVER_SIM = """
 import sys
@@ -91,7 +123,20 @@ def main() -> int:
                 " 0 fail",
             ),
         )
-        gates.append(("bench", [py, "bench.py"], '"failed": []'))
+        gates.append(
+            (
+                "parity-sf0.1",
+                [
+                    "env",
+                    "SF_DIR=/root/testdata/sf0.1",
+                    py,
+                    "tools/check_parity.py",
+                    "--strict-types",
+                    *SF01_KEYS,
+                ],
+                " 0 fail",
+            )
+        )
     results = [run(name, cmd, expect) for name, cmd, expect in gates]
     n_fail = results.count(False)
     print(json.dumps({"gates": len(results), "failed": n_fail, "fast": fast}))
