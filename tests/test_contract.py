@@ -52,15 +52,14 @@ def test_queries_order_is_module_order():
 
 
 def test_materialize_ignores_partial_dirs(tmp_path):
-    """A crashed (no _SUCCESS) scratch dir must be rebuilt, not reused."""
+    """A crashed (no _SUCCESS) scratch dir must be rebuilt, not reused;
+    the rebuilt copy is fenced by materialize, not by its writer."""
     final = str(tmp_path / "copy")
 
     def write(_df, path):
         os.makedirs(path)
         with open(os.path.join(path, "part-0"), "w") as f:
             f.write("data")
-        with open(os.path.join(path, "_SUCCESS"), "w") as f:
-            f.write("")
 
     # simulate a partial prior write at the final path (no _SUCCESS)
     os.makedirs(final)
@@ -74,13 +73,13 @@ def test_materialize_ignores_partial_dirs(tmp_path):
 
 
 def test_materialize_reuses_complete_dirs(tmp_path):
+    """A copy materialize fenced is reused, though its writer wrote no
+    fence of its own."""
     final = str(tmp_path / "copy")
     calls = []
 
     def write(_df, path):
         os.makedirs(path)
-        with open(os.path.join(path, "_SUCCESS"), "w") as f:
-            f.write("")
         calls.append(path)
 
     materialize(None, final, write)
@@ -104,8 +103,9 @@ def test_feed_sink_append_overwrite_and_fence(spark, sf_dir, tmp_path):
     (1) append mode publishes AFTER existing parts instead of renaming
     over them; (2) overwrite mode replaces them; (3) a fenced EMPTY
     commit reads back as an empty DataFrame; (4) an unfenced dir (a
-    simulated half-commit: parts present, no _FEEDCOMMIT/_SUCCESS) is
-    rejected rather than partially read."""
+    simulated half-commit: parts present, no _FEEDCOMMIT) is rejected
+    rather than partially read, and so is a dir fenced only by Spark's
+    _SUCCESS, which the feed's own sink never writes alone."""
     import os
 
     from pyspark.sql import functions as F
@@ -151,18 +151,60 @@ def test_feed_sink_append_overwrite_and_fence(spark, sf_dir, tmp_path):
         spark.read.format("event_feed").option("path", empty_target).load()
     ).count() == 0
 
-    # unfenced dir (half-commit) is rejected
-    half = str(tmp_path / "half")
-    os.makedirs(half)
-    with open(os.path.join(half, "part-00000.jsonl"), "w") as f:
-        f.write('{"event_id": 1, "ts_us": 0, "user_id": 1, '
-                '"event_type": "view", "value": 1.0}\n')
+    # unfenced dir (half-commit) and a Spark-fenced dir are rejected
     import pytest as _pytest
 
-    with _pytest.raises(Exception, match="commit fence"):
-        (
-            spark.read.format("event_feed").option("path", half).load()
-        ).count()
+    for name, fences in (("half", ()), ("spark_fenced", ("_SUCCESS",))):
+        d = str(tmp_path / name)
+        os.makedirs(d)
+        with open(os.path.join(d, "part-00000.jsonl"), "w") as f:
+            f.write('{"event_id": 1, "ts_us": 0, "user_id": 1, '
+                    '"event_type": "view", "value": 1.0}\n')
+        for fence in fences:
+            open(os.path.join(d, fence), "w").close()
+        with _pytest.raises(Exception, match="commit fence"):
+            (
+                spark.read.format("event_feed").option("path", d).load()
+            ).count()
+
+
+def test_key_runs_with_driver_outside_repository_root(spark, sf_dir, tmp_path):
+    """A driver whose cwd is not the repository root, with the package
+    importable on the driver only, still runs a key whose Python data
+    source is pickled by module name: ``configure`` puts the package on
+    the Python workers' path."""
+    import subprocess
+    import sys
+
+    from token_burn_listener_spark.tables import load_table
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = (
+        f"import sys; sys.path.insert(0, {root!r})\n"
+        "from pyspark.sql import SparkSession\n"
+        "import __spark_entry__ as contract\n"
+        "spark = (SparkSession.builder.master('local[2]')"
+        ".config('spark.ui.enabled', 'false').getOrCreate())\n"
+        "df = contract.queries()['q_src_python_batch'](spark, "
+        f"{sf_dir!r})\n"
+        "print('rows', df.count())\n"
+    )
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in env.get("PYTHONPATH", "").split(os.pathsep)
+        if p and os.path.abspath(p) != root
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-4000:]
+    n = load_table(spark, sf_dir, "events").count()
+    assert f"rows {n}" in out.stdout.splitlines(), out.stdout
 
 
 def test_load_table_infers_schema_once_per_file_version(

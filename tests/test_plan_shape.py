@@ -219,6 +219,37 @@ def test_ensure_bucketed_identity_includes_key(spark, sf_dir):
         assert buckets is not None and key in buckets, (name, buckets)
 
 
+def test_ensure_bucketed_warm_layout_reregisters_without_build(spark, sf_dir):
+    """A layout already on disk whose catalog entry is gone (a fresh
+    session) re-registers through the DDL without calling ``build``: a
+    derived ``build`` may run Spark jobs of its own (the minhash layout's
+    injectivity check), which only a cold layout pays."""
+    from token_burn_listener_spark.operators.storage import _ensure_bucketed
+    from token_burn_listener_spark.tables import load_table
+
+    calls = []
+
+    def build(s, d):
+        calls.append(d)
+        return load_table(s, d, "nation").repartition(2, "n_regionkey")
+
+    def ensure():
+        return _ensure_bucketed(
+            spark, sf_dir, "nation", "n_regionkey", "bkt_warm",
+            n_buckets=2, build=build,
+        )
+
+    name = ensure()
+    built = len(calls)
+    assert built <= 1
+    spark.sql(f"DROP TABLE {name}")  # external: the layout stays on disk
+    assert ensure() == name
+    assert len(calls) == built, "warm layout called build again"
+    assert spark.table(name).count() == load_table(
+        spark, sf_dir, "nation"
+    ).count()
+
+
 def test_corpus_prep_arrow_kernel_shape(spark, sf_dir):
     # r13 optimization: corpus_prep's gate pass (tokenize + trigram-set
     # count + sha256) runs in an Arrow kernel fed ONLY the gate columns

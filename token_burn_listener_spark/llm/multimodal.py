@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from token_burn_listener_spark.registry import query
+from token_burn_listener_spark.scratch import materialize, scratch_dir
+from token_burn_listener_spark.session import configure
 
 MULTIMODAL_SCHEMA = (
     "file_name string, n_bytes long, content_sha256 string, "
@@ -69,7 +71,7 @@ def q_llm_multimodal(spark: SparkSession, sf_dir: str) -> DataFrame:
     stand-in), extracts stub features per item via mapInPandas, and marks
     content-duplicate groups by sha256 — the multimodal dedup key.
     """
-    blobs = spark.read.format("binaryFile").load(f"{sf_dir}/*.parquet")
+    blobs = configure(spark).read.format("binaryFile").load(f"{sf_dir}/*.parquet")
     feats = blobs.mapInPandas(decode_batches, MULTIMODAL_SCHEMA)
     dups = feats.groupBy("content_sha256").agg(F.count("*").alias("n_same_content"))
     return (
@@ -138,7 +140,7 @@ def q_llm_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingestion shape (sample → decode → resize → embed) with decode stubbed
     deterministically; see sample_frames.
     """
-    blobs = spark.read.format("binaryFile").load(f"{sf_dir}/*.parquet")
+    blobs = configure(spark).read.format("binaryFile").load(f"{sf_dir}/*.parquet")
     return blobs.mapInPandas(sample_frames, FRAME_SCHEMA).orderBy(
         "file_name", "frame_idx"
     )
@@ -160,47 +162,29 @@ _N_MEDIA = 12  # per modality
 
 def _media_dir(sf_dir: str) -> str:
     """Generate-once media fixture (deterministic; no randomness, no time)."""
-    import shutil
     import struct
-    import uuid
     import wave
 
-    from token_burn_listener_spark.scratch import scratch_dir
+    def generate(_df: None, d: str) -> None:
+        os.makedirs(d)
+        for i in range(_N_MEDIA):
+            w, h = 16 + i % 8, 12 + i % 5
+            px = bytearray()
+            for y in range(h):
+                for x in range(w):
+                    v = (x + y + i) % 256
+                    px += bytes((v, v, v))  # grey: all 3 channels equal
+            with open(os.path.join(d, f"media-{i:03d}.ppm"), "wb") as f:
+                f.write(b"P6\n%d %d\n255\n" % (w, h) + bytes(px))
+            n = 1000 + 50 * i
+            samples = [((k * 73 + i * 37) % 201) - 100 for k in range(n)]
+            with wave.open(os.path.join(d, f"audio-{i:03d}.wav"), "wb") as wf:
+                wf.setnchannels(1)
+                wf.setsampwidth(2)
+                wf.setframerate(8000)
+                wf.writeframes(struct.pack(f"<{n}h", *samples))
 
-    final = scratch_dir(sf_dir, "media_fixture_v1")
-    if os.path.exists(os.path.join(final, "_DONE")):
-        return final
-    if os.path.exists(final):  # partial dir from a crashed writer: rebuild
-        shutil.rmtree(final)
-    d = f"{final}.tmp-{uuid.uuid4().hex[:8]}"
-    os.makedirs(d, exist_ok=True)
-    for i in range(_N_MEDIA):
-        w, h = 16 + i % 8, 12 + i % 5
-        px = bytearray()
-        for y in range(h):
-            for x in range(w):
-                v = (x + y + i) % 256
-                px += bytes((v, v, v))  # grey: all 3 channels equal
-        with open(os.path.join(d, f"media-{i:03d}.ppm"), "wb") as f:
-            f.write(b"P6\n%d %d\n255\n" % (w, h) + bytes(px))
-        n = 1000 + 50 * i
-        samples = [((k * 73 + i * 37) % 201) - 100 for k in range(n)]
-        with wave.open(os.path.join(d, f"audio-{i:03d}.wav"), "wb") as wf:
-            wf.setnchannels(1)
-            wf.setsampwidth(2)
-            wf.setframerate(8000)
-            wf.writeframes(struct.pack(f"<{n}h", *samples))
-    with open(os.path.join(d, "_DONE"), "w") as f:
-        f.write("ok")
-    try:
-        os.rename(d, final)  # atomic: the dir is only ever visible complete
-    except OSError:
-        # lost the build race: accept the winner's dir (same content — the
-        # generator is deterministic), drop our copy (scratch.py pattern)
-        shutil.rmtree(d, ignore_errors=True)
-        if not os.path.exists(os.path.join(final, "_DONE")):
-            raise
-    return final
+    return materialize(None, scratch_dir(sf_dir, "media_fixture_v1"), generate)
 
 
 MEDIA_SCHEMA = (
@@ -317,8 +301,5 @@ def q_llm_media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     PIL/ffmpeg changes only the Python body, not the plan.
     """
     d = _media_dir(sf_dir)
-    blobs = spark.read.format("binaryFile").load(d)
-    return (
-        blobs.filter(~F.col("path").endswith("_DONE"))
-        .mapInPandas(media_decode_batches, MEDIA_SCHEMA)
-    )
+    blobs = configure(spark).read.format("binaryFile").load(d)
+    return blobs.mapInPandas(media_decode_batches, MEDIA_SCHEMA)

@@ -133,8 +133,9 @@ def q_llm_corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     only, rep ratio and every gate float computed JVM-side from them
     with unchanged expression text. The lang/n_chars gates filter BEFORE
     the kernel: they are scan-column predicates, so they still push to
-    the parquet reader (PushedFilters in plans/r13/) AND they shrink
-    what crosses the Arrow boundary to the surviving rows.
+    the parquet reader (PushedFilters in
+    plans/r13/q_llm_corpus_prep_after.txt) AND they shrink what crosses
+    the Arrow boundary to the surviving rows.
     """
     d = load_table(spark, sf_dir, "documents")
     # (r14: spread_small_scan tried above the gate filters and REVERTED

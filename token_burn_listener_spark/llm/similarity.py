@@ -1333,15 +1333,6 @@ def _pq_subdist_col(a: str, b: str) -> Column:
     )
 
 
-# per-process codebook memo for _pq_codes_arrow, keyed on the embeddings
-# source (path, mtime_ns, size) so a regenerated fixture never reuses a
-# stale codebook; values are 16×64 float64 arrays (~8 KiB each). Bounded
-# (ADVICE r12): FIFO-capped so a long process cycling many fixtures can't
-# grow it without bound — eviction only re-pays one 16-row collect.
-_PQ_CB_CACHE: dict = {}
-_PQ_CB_CACHE_MAX = 16
-
-
 def _pq_encode_kernel(cb_np):
     """Arrow encode-kernel factory: batches of (vec_id, emb) → (vec_id,
     m, c) integer code rows, argmin over the closed-over (16, 64)
@@ -1397,9 +1388,7 @@ def _pq_encode_kernel(cb_np):
     return encode
 
 
-def _pq_codes_arrow(
-    e: DataFrame, cb: DataFrame, cache_key: tuple | None = None
-) -> DataFrame:
+def _pq_codes_arrow(e: DataFrame, cb: DataFrame) -> DataFrame:
     """(vec_id, m, c) PQ codes for the non-query corpus via the Arrow
     kernel. cb is the pinned 16-row codebook; collecting it is a bounded
     16×64-double fetch (house collect policy: codebooks/centroids only).
@@ -1407,24 +1396,14 @@ def _pq_codes_arrow(
     Arrow (tests/test_plan_shape.py).
 
     The collect runs at CONSTRUCTION time (the kernel closure needs the
-    codebook values), which is the one Spark job a plan-only consumer —
-    audit_plans, plan-shape tests, a benchmark constructing the query
-    N times — would otherwise pay per construction. ``cache_key``
-    (source path + stat, supplied by the query) memoizes the 8 KiB
-    array per fixture so repeated constructions in one process collect
-    once."""
+    codebook values): one Spark job per construction, which a plan-only
+    consumer (audit_plans, the plan-shape tests) pays too."""
     import numpy as np
 
-    cb_np = _PQ_CB_CACHE.get(cache_key) if cache_key is not None else None
-    if cb_np is None:
-        cb_np = np.array(
-            [r["cemb"] for r in sorted(cb.collect(), key=lambda r: r["c"])],
-            dtype=np.float64,
-        )
-        if cache_key is not None:
-            while len(_PQ_CB_CACHE) >= _PQ_CB_CACHE_MAX:
-                _PQ_CB_CACHE.pop(next(iter(_PQ_CB_CACHE)))
-            _PQ_CB_CACHE[cache_key] = cb_np
+    cb_np = np.array(
+        [r["cemb"] for r in sorted(cb.collect(), key=lambda r: r["c"])],
+        dtype=np.float64,
+    )
     return (
         e.filter(F.col("vec_id") != 0)
         .select("vec_id", "emb")
@@ -1547,13 +1526,7 @@ def q_llm_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r11 / 1553.3 s min(struct)). A fully unrolled in-row JVM argmin
     # was also tried: its 1024-term expression breaks whole-stage
     # codegen (janino limits) — rejected on measurement in r11.
-    import os
-
-    _src = os.path.join(sf_dir, "embeddings.parquet")
-    _st = os.stat(_src)
-    codes = _pq_codes_arrow(
-        e, cb, cache_key=(_src, _st.st_mtime_ns, _st.st_size)
-    )
+    codes = _pq_codes_arrow(e, cb)
     q = (
         e.filter(F.col("vec_id") == 0)
         .select(F.col("emb").alias("qemb"))

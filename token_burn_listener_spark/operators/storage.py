@@ -61,7 +61,7 @@ def _ensure_bucketed(
     layout of ``table`` clustered+sorted on ``key``; returns the catalog
     table name.
 
-    ``build`` (r13) lets the layout hold a DERIVED table instead of a raw
+    ``build`` lets the layout hold a DERIVED table instead of a raw
     fixture copy — e.g. the shingled corpus q_llm_minhash_bucketed
     clusters on doc_id. The callable produces the DataFrame to bucket;
     ``source`` names the fixture file whose (mtime, size) content-
@@ -71,25 +71,18 @@ def _ensure_bucketed(
     layout's SortOrder (skipping the merge-join re-sort) for
     single-file buckets.
 
-    r12 (VERDICT r11 #4): the bucketed DATA is now content-addressed on
-    disk (scratch_dir keyed on the table's OWN parquet mtime/size —
-    per-table, so regenerating one fixture file can never silently reuse
-    the other's stale layout, ADVICE r11) and REUSED across sessions: a
-    fresh driver/bench session re-registers the existing files through
-    one catalog DDL instead of re-paying the bucketBy write. That moves
-    the once-per-ingest layout cost out of every query that consumes the
-    layout — exactly the amortization story the docstrings tell — and it
-    is what the 100 TB deployment does too (the layout lives in the lake;
-    sessions only attach metadata). The build itself stays atomic via the
-    scratch temp+rename discipline: saveAsTable writes to a temp dir
-    under a throwaway name (DROP TABLE on an external table keeps the
-    files), then the dir renames into its content-addressed place and
-    both cold and warm paths register through the SAME DDL — so the
-    zero-exchange plan asserts always run against the DDL-registered
-    form.
+    The bucketed DATA is content-addressed on disk (scratch_dir keyed on
+    the source file's own mtime/size, so regenerating one fixture can
+    never reuse another's stale layout) and reused across sessions: a
+    fresh session re-registers the files through one catalog DDL instead
+    of re-paying the bucketBy write, as a lake-resident layout would be
+    attached at 100 TB. The build runs inside ``materialize``'s write
+    (``build`` may start Spark jobs, which a warm layout must not pay):
+    saveAsTable writes the temp dir under a throwaway name, and DROP
+    TABLE on that external table keeps the files. Cold and warm paths
+    register through the SAME DDL, so the zero-exchange plan asserts
+    always run against the DDL-registered form.
     """
-    import os
-    import shutil
     import uuid
 
     src = source if source is not None else f"{sf_dir}/{table}.parquet"
@@ -101,11 +94,8 @@ def _ensure_bucketed(
     name = f"{prefix}_{table}_{key}_" + path.split("/")[-2]
     if spark.catalog.tableExists(name):
         return name
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        if os.path.exists(path):  # partial dir from a crashed writer
-            shutil.rmtree(path)
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
+
+    def write(_df: None, tmp: str) -> None:
         tmp_name = f"{name}_build_{uuid.uuid4().hex[:8]}"
         df = (
             build(spark, sf_dir)
@@ -120,12 +110,8 @@ def _ensure_bucketed(
             .saveAsTable(tmp_name)
         )
         spark.sql(f"DROP TABLE {tmp_name}")  # external: files stay
-        try:
-            os.rename(tmp, path)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-            if not os.path.exists(os.path.join(path, "_SUCCESS")):
-                raise
+
+    materialize(None, path, write)
     cols = ", ".join(
         f"`{f.name}` {f.dataType.simpleString()}"
         for f in spark.read.parquet(path).schema.fields

@@ -1,12 +1,17 @@
 """Scratch-dir materialization for derived fixture copies.
 
-Derived inputs (JSON/CSV copies of fixtures, streaming replay dirs) are
-written once per (full sf_dir path, tag) and reused. Two hazards are handled
-here (they bit round 1's mode('ignore') approach — see ADVICE.md):
+Derived inputs (JSON/CSV copies of fixtures, streaming replay dirs,
+bucketed layouts, the event feed, the media fixture) are written once per
+(full sf_dir path, tag) and reused. ``materialize`` is the only code that
+builds a scratch copy and decides when one is complete. Two hazards are
+handled here (they bit round 1's mode('ignore') approach — see ADVICE.md):
 
 - **Partial writes**: a crashed writer must not leave a half-dir that later
-  reads silently consume. We write to a unique temp dir and atomically
-  ``os.rename`` it into place; a dir is only ever visible complete.
+  reads silently consume. We write to a unique temp dir, write the
+  ``_SUCCESS`` fence ourselves once the write returned (a Hadoop committer
+  can be set not to write one), and atomically ``os.rename`` the dir into
+  place; a dir is only ever visible complete, and a dir without the fence
+  is rebuilt.
 - **Path collisions**: scratch is keyed on a hash of the absolute sf_dir, so
   two fixture trees with the same basename never share a cache entry.
 """
@@ -45,13 +50,16 @@ def fresh_run_dir(tag: str) -> str:
 
 
 def materialize(
-    df: DataFrame, final_dir: str, write: Callable[[DataFrame, str], None]
+    df: DataFrame | None,
+    final_dir: str,
+    write: Callable[[DataFrame | None, str], None],
 ) -> str:
     """Write ``df`` to ``final_dir`` exactly once, atomically.
 
-    ``write(df, path)`` performs the actual format-specific write. A
-    successful prior materialization (marked by Spark's _SUCCESS) is reused;
-    anything else is rebuilt from a temp dir + rename.
+    ``write(df, path)`` performs the actual write into the temp dir
+    ``path`` (a copy generated without a DataFrame passes ``df=None``).
+    A prior materialization fenced by ``_SUCCESS`` is reused; anything
+    else is rebuilt from a temp dir + fence + rename.
     """
     if os.path.exists(os.path.join(final_dir, "_SUCCESS")):
         return final_dir
@@ -61,6 +69,7 @@ def materialize(
     os.makedirs(os.path.dirname(final_dir), exist_ok=True)
     tmp = f"{final_dir}.tmp-{uuid.uuid4().hex[:8]}"
     write(df, tmp)
+    open(os.path.join(tmp, "_SUCCESS"), "w").close()
     try:
         os.rename(tmp, final_dir)
     except OSError:

@@ -71,8 +71,25 @@ RUNTIME_CONFS: dict[str, str] = {
 }
 
 
+# The directory holding this package, for the Python workers' path.
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def configure(spark: SparkSession) -> SparkSession:
-    """Apply runtime confs to an existing session (idempotent)."""
+    """Apply runtime confs to an existing session (idempotent), and put
+    this package on the Python workers' path once per SparkContext.
+
+    Data sources and Arrow kernels defined at module level are pickled by
+    module name, so every Python worker must import
+    ``token_burn_listener_spark``, also when the driver runs outside the
+    repository root. Each Python function carries the context's
+    ``environment`` to its worker when it is wrapped, so the package's
+    parent directory goes on that ``PYTHONPATH``: it reaches executor
+    workers, the driver-side data source planners and the streaming
+    source runner alike (``SparkContext.addFile`` misses the last, which
+    reads a fixed ``streaming_job`` subdirectory of the SparkFiles root).
+    A later call finds the entry in a Python dict: no JVM round trip.
+    """
     for key, value in RUNTIME_CONFS.items():
         try:
             spark.conf.set(key, value)
@@ -80,6 +97,10 @@ def configure(spark: SparkSession) -> SparkSession:
             # A conf may be marked static in some deployments; the session
             # owner is then responsible for it. Never fail the query path.
             pass
+    env = spark.sparkContext.environment
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if _ROOT not in paths:
+        env["PYTHONPATH"] = os.pathsep.join([_ROOT, *paths])
     return spark
 
 

@@ -34,7 +34,9 @@ re-scanning a lake.
 
 The feed file itself is the events fixture as JSON-lines with epoch-µs
 timestamps (a raw provider feed shape; µs longs avoid timestamp-format
-parsing drift between writer and reader).
+parsing drift between writer and reader). Every feed is published by the
+feed's own two-phase sink (``_FeedWriter``, ``write.format("event_feed")``),
+so readers accept exactly one commit fence, its ``_FEEDCOMMIT`` manifest.
 """
 
 from __future__ import annotations
@@ -61,6 +63,7 @@ from pyspark.sql.datasource import (
 
 from token_burn_listener_spark.registry import query
 from token_burn_listener_spark.scratch import materialize, scratch_dir
+from token_burn_listener_spark.session import configure
 from token_burn_listener_spark.streaming.replay import nonempty_batches
 from token_burn_listener_spark.tables import load_table
 
@@ -88,19 +91,17 @@ def _feed_files(path: str) -> list[str]:
     """All JSONL part files inside a committed feed dir (sorted for
     determinism).
 
-    r12 review: readers now ENFORCE the commit fence the writer
-    docstring always promised — a dir without ``_FEEDCOMMIT`` (the
-    two-phase sink's manifest) or ``_SUCCESS`` (Spark's own fence, for
-    ensure_feed's json-written dirs) is a crashed half-commit and is
-    rejected rather than silently read partially. A FENCED dir with
-    zero parts is a validly committed EMPTY feed and returns [] (it
-    previously raised, making a legal empty commit unreadable)."""
-    fenced = os.path.exists(os.path.join(path, "_FEEDCOMMIT")) or os.path.exists(
-        os.path.join(path, "_SUCCESS")
-    )
-    if not fenced:
+    Readers enforce the commit fence: a dir without ``_FEEDCOMMIT``, the
+    manifest ``_FeedWriter.commit`` writes after publishing every part,
+    is a crashed half-commit and is rejected rather than read partially.
+    The writer is the feed's only one, so Spark's ``_SUCCESS`` is refused:
+    a Spark-written dir names its parts ``part-<index>-<job uuid>``, and a
+    later append would sort by uuid, not by time, behind a cursor already
+    past it. A fenced dir with zero parts is a validly committed EMPTY
+    feed and returns []."""
+    if not os.path.exists(os.path.join(path, "_FEEDCOMMIT")):
         raise FileNotFoundError(
-            f"feed at {path} has no commit fence (_FEEDCOMMIT/_SUCCESS) — "
+            f"feed at {path} has no commit fence (_FEEDCOMMIT) — "
             "uncommitted or half-visible data is rejected"
         )
     return sorted(glob.glob(os.path.join(path, "part-*")))
@@ -421,15 +422,26 @@ def _feed_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def ensure_feed(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the events fixture as a single JSONL feed file."""
+    """Register the source and materialize the events fixture as a
+    single-part feed, published by the feed's own sink (``_FeedWriter``).
+    The tag's ``_v2`` keeps copies cached by Spark's JSON writer, which
+    the reader refuses, out of use."""
+    register_feed_source(spark)
     return materialize(
         _feed_rows(spark, sf_dir),
-        scratch_dir(sf_dir, "events_feed", source=f"{sf_dir}/events.parquet"),
-        lambda d, p: d.coalesce(1).write.json(p),
+        scratch_dir(
+            sf_dir, "events_feed_v2", source=f"{sf_dir}/events.parquet"
+        ),
+        lambda d, p: d.coalesce(1)
+        .write.format("event_feed")
+        .option("path", p)
+        .mode("append")
+        .save(),
     )
 
 
 def register_feed_source(spark: SparkSession) -> None:
+    configure(spark)  # the source is pickled with the workers' path
     spark.dataSource.register(EventFeedDataSource)
 
 
@@ -445,7 +457,6 @@ def q_src_python_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     every event row, read via parallel newline-aligned byte-range
     partitions, value-exact against the parquet-backed oracle (JSON double
     round-trip is shortest-repr exact)."""
-    register_feed_source(spark)
     path = ensure_feed(spark, sf_dir)
     return spark.read.format("event_feed").option("path", path).load()
 
@@ -476,7 +487,6 @@ def q_src_python_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from token_burn_listener_spark.scratch import fresh_run_dir
 
-    register_feed_source(spark)
     path = ensure_feed(spark, sf_dir)
     n_events = load_table(spark, sf_dir, "events").count()
     per_batch = max(1, n_events // 4)
