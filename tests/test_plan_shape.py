@@ -219,11 +219,14 @@ def test_ensure_bucketed_identity_includes_key(spark, sf_dir):
         assert buckets is not None and key in buckets, (name, buckets)
 
 
-def test_ensure_bucketed_warm_layout_reregisters_without_build(spark, sf_dir):
+def test_ensure_bucketed_warm_layout_reregisters_without_build(
+    spark, sf_dir, spark_jobs
+):
     """A layout already on disk whose catalog entry is gone (a fresh
-    session) re-registers through the DDL without calling ``build``: a
-    derived ``build`` may run Spark jobs of its own (the minhash layout's
-    injectivity check), which only a cold layout pays."""
+    session) re-registers through the DDL without calling ``build`` and
+    without a Spark job: a derived ``build`` may run Spark jobs of its own
+    (the minhash layout's injectivity check), which only a cold layout
+    pays, and the DDL's columns come from a part file's footer."""
     from token_burn_listener_spark.operators.storage import _ensure_bucketed
     from token_burn_listener_spark.tables import load_table
 
@@ -243,8 +246,10 @@ def test_ensure_bucketed_warm_layout_reregisters_without_build(spark, sf_dir):
     built = len(calls)
     assert built <= 1
     spark.sql(f"DROP TABLE {name}")  # external: the layout stays on disk
-    assert ensure() == name
+    again, jobs = spark_jobs(ensure)
+    assert again == name
     assert len(calls) == built, "warm layout called build again"
+    assert jobs == 0, f"warm re-registration ran {jobs} Spark jobs"
     assert spark.table(name).count() == load_table(
         spark, sf_dir, "nation"
     ).count()

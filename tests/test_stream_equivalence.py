@@ -14,6 +14,7 @@ Three layers, mirroring what the DuckDB oracle cannot see:
 
 from __future__ import annotations
 
+import collections
 import datetime
 import uuid
 
@@ -21,10 +22,14 @@ from pyspark.sql import functions as F
 
 from token_burn_listener_spark.registry import QUERIES, load_all_modules
 from token_burn_listener_spark.scratch import fresh_run_dir
+from token_burn_listener_spark.streaming.queries import (
+    latest_delta_writer,
+    read_latest,
+)
 from token_burn_listener_spark.streaming.replay import (
     batch_upsert_writer,
+    drain_phases,
     ensure_events_replay,
-    ensure_events_replay_multi,
     events_df,
     read_events_stream,
     read_upsert_target,
@@ -150,7 +155,7 @@ def test_rate_limit_bounded_batches(spark, sf_dir):
     """A10: maxFilesPerTrigger=1 over a 4-file replay → exactly 4 non-empty
     micro-batches, jointly covering every event exactly once."""
     n_events = events_df(spark, sf_dir).count()
-    replay = ensure_events_replay_multi(spark, sf_dir, n_files=4)
+    replay = ensure_events_replay(spark, sf_dir, n_files=4)
     src = read_events_stream(spark, replay, maxFilesPerTrigger="1")
     name = f"rl_{uuid.uuid4().hex[:8]}"
     q = (
@@ -198,6 +203,46 @@ def test_checkpoint_restart_exactly_once(spark, sf_dir):
     ev = events_df(spark, sf_dir)
     assert out.count() == ev.count()
     assert out.select("event_id").distinct().count() == ev.count()
+
+
+def test_drain_phases_restart_reads_only_new_phase(spark, sf_dir, tmp_path):
+    """The crash-and-restart drain itself, not only its final relation:
+    each phase is one micro-batch, the restarted run's input is exactly
+    phase 2 (it resumed from the checkpoint instead of re-reading phase
+    1), and the upsert target holds every row once."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    by_run = collections.Counter()
+
+    class InputRows(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            by_run[str(event.progress.runId)] += event.progress.numInputRows
+
+        def onQueryTerminated(self, event):
+            pass
+
+    ev = events_df(spark, sf_dir)
+    phases = [
+        ev.filter(F.col("event_id") % 3 != 0),
+        ev.filter(F.col("event_id") % 3 == 0),
+    ]
+    target = f"{tmp_path}/target"
+    rows = InputRows()
+    spark.streams.addListener(rows)
+    try:
+        counts = drain_phases(
+            phases, lambda read: read(), batch_upsert_writer(target), str(tmp_path)
+        )
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    finally:
+        spark.streams.removeListener(rows)
+    assert counts == [1, 1]
+    assert list(by_run.values()) == [phases[0].count(), phases[1].count()]
+    # exceptAll both ways is multiset equality: every event exactly once
+    assert_df_equal(read_upsert_target(spark, target), ev)
 
 
 def test_foreachbatch_upsert_idempotent(spark, sf_dir):
@@ -451,32 +496,12 @@ def test_upsert_latest_independent_of_replay_order(
         )
         base = str(tmp_path_factory.mktemp("upl"))
         target, cp = f"{base}/target", f"{base}/cp"
-
-        def delta_writer(batch_df, batch_id):
-            latest = (
-                batch_df.withColumn("rn", F.row_number().over(w))
-                .filter(F.col("rn") == 1)
-                .drop("rn")
-            )
-            latest.write.mode("overwrite").parquet(f"{target}/batch={batch_id}")
-
         run_foreach_batch(
             read_events_stream(spark, replay, maxFilesPerTrigger="1"),
-            delta_writer,
+            latest_delta_writer(target),
             cp,
         )
-        compacted = (
-            read_upsert_target(spark, target)
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select(
-                "user_id",
-                F.col("ts").alias("last_ts"),
-                F.col("event_id").alias("last_event_id"),
-                F.col("value").alias("last_value"),
-            )
-        )
-        assert_df_equal(compacted, batch)
+        assert_df_equal(read_latest(spark, target), batch)
 
 
 def test_reorg_step_is_idempotent_under_batch_retry(spark, sf_dir, tmp_path):

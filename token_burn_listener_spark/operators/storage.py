@@ -26,11 +26,15 @@ fresh session pays metadata registration, not a bucketBy rewrite.
 
 from __future__ import annotations
 
+import glob
+import json
 import re
 from collections.abc import Callable
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from token_burn_listener_spark.registry import query
 from token_burn_listener_spark.scratch import materialize, scratch_dir
@@ -38,7 +42,8 @@ from token_burn_listener_spark.tables import load_table
 
 
 def _plan(df: DataFrame) -> str:
-    """Formatted physical plan text (same path tools/audit_plans.py uses)."""
+    """Formatted physical plan text (the plan asserts, tools/audit_plans.py
+    and tools/plan_dump.py all read this form)."""
     jvm_mode = (
         df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
             "formatted"
@@ -76,9 +81,10 @@ def _ensure_bucketed(
     never reuse another's stale layout) and reused across sessions: a
     fresh session re-registers the files through one catalog DDL instead
     of re-paying the bucketBy write, as a lake-resident layout would be
-    attached at 100 TB. The build runs inside ``materialize``'s write
-    (``build`` may start Spark jobs, which a warm layout must not pay):
-    saveAsTable writes the temp dir under a throwaway name, and DROP
+    attached at 100 TB; the DDL's column list is read from one part
+    file's footer, so a warm registration starts no Spark job. The build
+    runs inside ``materialize``'s write (``build`` may start Spark jobs,
+    which a warm layout must not pay): saveAsTable writes the temp dir under a throwaway name, and DROP
     TABLE on that external table keeps the files. Cold and warm paths
     register through the SAME DDL, so the zero-exchange plan asserts
     always run against the DDL-registered form.
@@ -112,9 +118,14 @@ def _ensure_bucketed(
         spark.sql(f"DROP TABLE {tmp_name}")  # external: files stay
 
     materialize(None, path, write)
+    # Spark's writer keeps its schema in every footer; reading it through
+    # spark.read.parquet(path).schema would start a Spark job
+    footer = pq.read_metadata(sorted(glob.glob(f"{path}/part-*"))[0]).metadata
+    schema = StructType.fromJson(
+        json.loads(footer[b"org.apache.spark.sql.parquet.row.metadata"])
+    )
     cols = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}"
-        for f in spark.read.parquet(path).schema.fields
+        f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
     )
     spark.sql(
         f"CREATE TABLE {name} ({cols}) USING parquet"

@@ -11,8 +11,9 @@ dir, ``availableNow`` trigger) and returns the sink contents, so the
 driver's DuckDB oracle checks actual streaming output — not a batch
 stand-in. Determinism comes from: one replay file → one micro-batch for the
 single-run keys; explicit two-run checkpointed phases for the
-watermark/late/restart keys (the second run starts from the committed
-offsets + watermark of the first, exactly like a process restart).
+watermark/late/restart keys, all drained by ``replay.drain_phases`` (the
+second run starts from the committed offsets + watermark of the first,
+exactly like a process restart).
 
 Scale notes (100 TB): complete-mode memory sinks below are test
 instrumentation only — production output is the foreachBatch exactly-once
@@ -33,6 +34,7 @@ semantics on the stable API.
 from __future__ import annotations
 
 import datetime
+from collections.abc import Callable
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -43,8 +45,8 @@ from token_burn_listener_spark.registry import query
 from token_burn_listener_spark.scratch import fresh_run_dir
 from token_burn_listener_spark.streaming.replay import (
     batch_upsert_writer,
+    drain_phases,
     ensure_events_replay,
-    ensure_events_replay_multi,
     events_df,
     read_events_stream,
     read_upsert_target,
@@ -64,6 +66,17 @@ def _ts_bounds(spark: SparkSession, sf_dir: str):
         F.min("ts").alias("mn"), F.max("ts").alias("mx")
     ).collect()[0]
     return row.mn, row.mx
+
+
+def _held_back(
+    spark: SparkSession, sf_dir: str, span: datetime.timedelta
+) -> list[DataFrame]:
+    """Replay phases for the watermark keys: the events after
+    min(ts) + ``span``, then the held-back first ``span``, which is late
+    once phase 1's watermark has passed it."""
+    t0 = _ts_bounds(spark, sf_dir)[0] + span
+    ev = events_df(spark, sf_dir)
+    return [ev.filter(F.col("ts") > t0), ev.filter(F.col("ts") <= t0)]
 
 
 # ---------------------------------------------------------------------------
@@ -124,7 +137,7 @@ def q_stream_rate_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the run (the count alone can't); the exact 4-batch shape is pinned in
     tests/test_stream_equivalence.py.
     """
-    replay = ensure_events_replay_multi(spark, sf_dir, n_files=4)
+    replay = ensure_events_replay(spark, sf_dir, n_files=4)
     counted = read_events_stream(
         spark, replay, maxFilesPerTrigger="1"
     ).agg(F.count("*").alias("n_events"))
@@ -246,44 +259,6 @@ def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _two_phase_windows(
-    spark: SparkSession,
-    sf_dir: str,
-    split_after: datetime.timedelta,
-    delay: str,
-    group_cols: list,
-    out_cols: list,
-):
-    """Run a watermarked window agg over a two-phase replay.
-
-    Phase 1 streams the on-time slice (ts > min+split) and commits its
-    watermark to the checkpoint; phase 2 appends the remaining (late) rows
-    and RESTARTS from the same checkpoint — the persisted watermark drops
-    them and evicts closed windows to the exactly-once sink, exactly what a
-    listener restart does (A8/A9).
-    """
-    mn, _mx = _ts_bounds(spark, sf_dir)
-    t0 = mn + split_after
-    ev = events_df(spark, sf_dir)
-    base = fresh_run_dir("wm")
-    replay, target, cp = f"{base}/replay", f"{base}/target", f"{base}/cp"
-    ev.filter(F.col("ts") > t0).coalesce(1).write.parquet(replay)
-
-    def run_once() -> None:
-        src = read_events_stream(spark, replay)
-        agg = (
-            src.withWatermark("ts", delay)
-            .groupBy(F.window("ts", "1 hour").alias("w"), *group_cols)
-            .agg(F.count("*").alias("n"))
-        )
-        run_foreach_batch(agg.select(*out_cols), batch_upsert_writer(target), cp)
-
-    run_once()
-    ev.filter(F.col("ts") <= t0).coalesce(1).write.mode("append").parquet(replay)
-    run_once()
-    return read_upsert_target(spark, target)
-
-
 @query(
     "q_stream_watermark",
     oracle="""
@@ -306,16 +281,23 @@ def q_stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The sink holds exactly the hourly windows whose end ≤ final watermark
     (max on-time ts − 10 min); rows arriving after the watermark passed
-    their window are dropped — both facts checked by the oracle.
+    their window are dropped — both facts checked by the oracle. Phase 1
+    streams the on-time slice (ts > min + 12 h) and commits its watermark;
+    phase 2 appends the rest and RESTARTS on the same checkpoint
+    (``drain_phases``), so the persisted watermark drops those rows.
     """
-    return _two_phase_windows(
-        spark,
-        sf_dir,
-        split_after=datetime.timedelta(hours=12),
-        delay="10 minutes",
-        group_cols=[],
-        out_cols=[F.col("w.end").alias("we"), F.col("n")],
+    base = fresh_run_dir("wm")
+    drain_phases(
+        _held_back(spark, sf_dir, datetime.timedelta(hours=12)),
+        lambda read: read()
+        .withWatermark("ts", "10 minutes")
+        .groupBy(F.window("ts", "1 hour").alias("w"))
+        .agg(F.count("*").alias("n"))
+        .select(F.col("w.end").alias("we"), "n"),
+        batch_upsert_writer(f"{base}/target"),
+        base,
     )
+    return read_upsert_target(spark, f"{base}/target")
 
 
 @query(
@@ -341,15 +323,21 @@ def q_stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     The whole first day of events is replayed LAST (after the watermark has
     advanced ~29 days past them): the oracle counts only on-time events —
     the key passes only because the stream really dropped the late ones.
+    The late day is phase 2 of ``drain_phases``: a restart on the
+    checkpoint that holds phase 1's watermark.
     """
-    return _two_phase_windows(
-        spark,
-        sf_dir,
-        split_after=datetime.timedelta(days=1),
-        delay="30 minutes",
-        group_cols=["event_type"],
-        out_cols=[F.col("w.end").alias("we"), F.col("event_type"), F.col("n")],
+    base = fresh_run_dir("late")
+    drain_phases(
+        _held_back(spark, sf_dir, datetime.timedelta(days=1)),
+        lambda read: read()
+        .withWatermark("ts", "30 minutes")
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+        .agg(F.count("*").alias("n"))
+        .select(F.col("w.end").alias("we"), "event_type", "n"),
+        batch_upsert_writer(f"{base}/target"),
+        base,
     )
+    return read_upsert_target(spark, f"{base}/target")
 
 
 @query(
@@ -583,15 +571,13 @@ def q_stream_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = events_df(spark, sf_dir)
     base = fresh_run_dir("ckpt")
-    replay, target, cp = f"{base}/replay", f"{base}/target", f"{base}/cp"
-    upsert = batch_upsert_writer(target)
-    ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.parquet(replay)
-    run_foreach_batch(read_events_stream(spark, replay), upsert, cp)
-    ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode("append").parquet(
-        replay
+    drain_phases(
+        [ev.filter(F.col("event_id") % 2 == i) for i in (0, 1)],
+        lambda read: read(),
+        batch_upsert_writer(f"{base}/target"),
+        base,
     )
-    run_foreach_batch(read_events_stream(spark, replay), upsert, cp)
-    return read_upsert_target(spark, target)
+    return read_upsert_target(spark, f"{base}/target")
 
 
 @query("q_stream_outer_join")  # rows-only: outer-null emission timing is
@@ -610,26 +596,24 @@ def q_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     join, null rows ⊆ batch-unmatched purchases, each purchase at most once
     — are pinned in tests.
     """
+    _mn, mx = _ts_bounds(spark, sf_dir)
     ev = events_df(spark, sf_dir)
-    mx = ev.agg(F.max("ts")).collect()[0][0]
     base = fresh_run_dir("oj")
-    replay, target, cp = f"{base}/replay", f"{base}/target", f"{base}/cp"
-    ev.filter(F.col("ts") < mx).coalesce(1).write.parquet(replay)
 
-    def run_once() -> None:
+    def join(read) -> DataFrame:
         p = (
-            read_events_stream(spark, replay)
+            read()
             .filter(F.col("event_type") == "purchase")
             .withWatermark("ts", "10 minutes")
             .alias("p")
         )
         v = (
-            read_events_stream(spark, replay)
+            read()
             .filter(F.col("event_type") == "view")
             .withWatermark("ts", "10 minutes")
             .alias("v")
         )
-        joined = p.join(
+        return p.join(
             v,
             F.expr(
                 "p.user_id = v.user_id"
@@ -640,12 +624,14 @@ def q_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("p.event_id").alias("purchase_id"),
             F.col("v.event_id").alias("view_id"),
         )
-        run_foreach_batch(joined, batch_upsert_writer(target), cp)
 
-    run_once()
-    ev.filter(F.col("ts") >= mx).coalesce(1).write.mode("append").parquet(replay)
-    run_once()
-    return read_upsert_target(spark, target)
+    drain_phases(
+        [ev.filter(F.col("ts") < mx), ev.filter(F.col("ts") >= mx)],
+        join,
+        batch_upsert_writer(f"{base}/target"),
+        base,
+    )
+    return read_upsert_target(spark, f"{base}/target")
 
 
 @query(
@@ -672,7 +658,7 @@ def q_stream_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     feed_a = read_events_stream(spark, ensure_events_replay(spark, sf_dir))
     feed_b = read_events_stream(
-        spark, ensure_events_replay_multi(spark, sf_dir, n_files=4)
+        spark, ensure_events_replay(spark, sf_dir, n_files=4)
     )
     agg = (
         feed_a.select("event_type", "value")
@@ -681,6 +667,42 @@ def q_stream_union(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n"), F.round(F.sum("value"), 6).alias("sum_value"))
     )
     return run_to_memory(agg, "complete")
+
+
+def _latest_per_user(df: DataFrame) -> DataFrame:
+    """Each user's latest row by (ts DESC, event_id DESC); event_id makes
+    the order total, so the pick does not depend on how rows are split."""
+    from pyspark.sql.window import Window
+
+    w = Window.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
+    return (
+        df.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .drop("rn")
+    )
+
+
+def latest_delta_writer(target: str) -> Callable[[DataFrame, int], None]:
+    """foreachBatch function writing each batch's per-user latest rows as
+    an idempotent ``target/batch=<id>`` delta (overwritten on a retry)."""
+
+    def write(batch_df: DataFrame, batch_id: int) -> None:
+        _latest_per_user(batch_df).write.mode("overwrite").parquet(
+            f"{target}/batch={batch_id}"
+        )
+
+    return write
+
+
+def read_latest(spark: SparkSession, target: str) -> DataFrame:
+    """The merge-on-read view of ``latest_delta_writer``'s deltas: all of
+    them compacted latest-wins, one row per user."""
+    return _latest_per_user(read_upsert_target(spark, target)).select(
+        "user_id",
+        F.col("ts").alias("last_ts"),
+        F.col("event_id").alias("last_event_id"),
+        F.col("value").alias("last_value"),
+    )
 
 
 @query(
@@ -714,41 +736,16 @@ def q_stream_upsert_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_cdc_merge's latest-op-wins collapse; state never lives in the
     stream (restart-safe via source offsets alone, no state store).
     """
-    from pyspark.sql.window import Window
-
     base = fresh_run_dir("upl")
     target, cp = f"{base}/target", f"{base}/cp"
-    replay = ensure_events_replay_multi(spark, sf_dir, n_files=4)
+    replay = ensure_events_replay(spark, sf_dir, n_files=4)
     stream = read_events_stream(spark, replay, maxFilesPerTrigger="1")
-
-    def delta_writer(batch_df: DataFrame, batch_id: int) -> None:
-        w = Window.partitionBy("user_id").orderBy(
-            F.desc("ts"), F.desc("event_id")
-        )
-        latest = (
-            batch_df.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .drop("rn")
-        )
-        latest.write.mode("overwrite").parquet(f"{target}/batch={batch_id}")
-
-    n_batches = run_foreach_batch(stream, delta_writer, cp)
+    n_batches = run_foreach_batch(stream, latest_delta_writer(target), cp)
     if n_batches < 4:
         raise AssertionError(
             f"rate limit not applied: {n_batches} non-empty micro-batches"
         )
-    full = read_upsert_target(spark, target)
-    w = Window.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
-    return (
-        full.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "user_id",
-            F.col("ts").alias("last_ts"),
-            F.col("event_id").alias("last_event_id"),
-            F.col("value").alias("last_value"),
-        )
-    )
+    return read_latest(spark, target)
 
 
 @query(
@@ -781,9 +778,9 @@ def q_stream_chained(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Before multi-stateful-operator support this required materializing the
     hourly level and running a second job; chaining keeps the rollup
-    pipeline in one checkpoint with one consistent watermark. Uses the
-    proven two-phase replay harness (q_stream_watermark): phase 1 streams
-    the on-time slice, phase 2 appends the held-back first day — those
+    pipeline in one checkpoint with one consistent watermark. Drained by
+    ``drain_phases`` as q_stream_late_data is: phase 1 streams the on-time
+    slice, phase 2 appends the held-back first day and restarts — those
     rows are late past the persisted watermark, so they are dropped while
     their batches drive the final emission of closed day windows.
 
@@ -792,32 +789,27 @@ def q_stream_chained(spark: SparkSession, sf_dir: str) -> DataFrame:
     moves hourly AGGREGATES (thousands of rows), not events. RocksDB
     (q_stream_rocksdb) carries the same plan at production key counts.
     """
-    mn, _mx = _ts_bounds(spark, sf_dir)
-    t0 = mn + datetime.timedelta(days=1)
-    ev = events_df(spark, sf_dir)
     base = fresh_run_dir("chain")
-    replay, target, cp = f"{base}/replay", f"{base}/target", f"{base}/cp"
-    ev.filter(F.col("ts") > t0).coalesce(1).write.parquet(replay)
 
-    def run_once() -> None:
-        src = read_events_stream(spark, replay)
+    def rollup(read) -> DataFrame:
         hourly = (
-            src.withWatermark("ts", "30 minutes")
+            read()
+            .withWatermark("ts", "30 minutes")
             .groupBy(F.window("ts", "1 hour").alias("w1"), "event_type")
             .agg(F.count("*").alias("n"))
         )
         daily = hourly.groupBy(F.window(F.col("w1"), "1 day").alias("w2")).agg(
             F.sum("n").alias("n_events"), F.count("*").alias("n_type_hours")
         )
-        out = daily.select(
-            F.col("w2.end").alias("de"), "n_events", "n_type_hours"
-        )
-        run_foreach_batch(out, batch_upsert_writer(target), cp)
+        return daily.select(F.col("w2.end").alias("de"), "n_events", "n_type_hours")
 
-    run_once()
-    ev.filter(F.col("ts") <= t0).coalesce(1).write.mode("append").parquet(replay)
-    run_once()
-    return read_upsert_target(spark, target)
+    drain_phases(
+        _held_back(spark, sf_dir, datetime.timedelta(days=1)),
+        rollup,
+        batch_upsert_writer(f"{base}/target"),
+        base,
+    )
+    return read_upsert_target(spark, f"{base}/target")
 
 
 @query(
@@ -887,6 +879,20 @@ def q_stream_dynamic_session(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n",
     )
     return run_to_memory(out, "complete")
+
+
+def _restart_log(spark: SparkSession, log: str, counts: list[int]) -> DataFrame:
+    """Read the per-batch log of a two-phase ``drain_phases`` key, checking
+    the restart schedule: one micro-batch per run, and batch ids that
+    continue across the restart (two logged batches, not batch 0 twice)."""
+    out = spark.read.parquet(log)
+    n_batches = out.select("batch").distinct().count()
+    if counts != [1, 1] or n_batches != 2:
+        raise AssertionError(
+            f"restart schedule broken: {counts} micro-batches per run,"
+            f" {n_batches} logged micro-batches"
+        )
+    return out
 
 
 def _reorg_oracle() -> str:
@@ -978,9 +984,9 @@ def q_stream_reorg(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrive over time, the listener follows the chain it can see, and
     when a longer branch overtakes, previously-applied blocks must be
     retracted from the sink. Two phases with a GENUINE PROCESS RESTART
-    between them (the _two_phase_windows recipe): phase 1 streams the
-    chain as a b-following listener saw it (a-blocks below the fork +
-    the 2-block uncle branch) and stops; phase 2 appends the canonical
+    between them (``drain_phases``): phase 1 streams the chain as a
+    b-following listener saw it (a-blocks below the fork + the 2-block
+    uncle branch) and stops; phase 2 appends the canonical
     a-blocks that overtake it and RESTARTS from the same checkpoint —
     exactly a listener that polled, crashed/redeployed, and resumed.
     Each micro-batch re-walks the chain (flag_canonical — the SAME walk
@@ -1000,17 +1006,9 @@ def q_stream_reorg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from token_burn_listener_spark.operators.events import reorg_blocks
 
-    blocks = reorg_blocks(events_df(spark, sf_dir)).select(
-        "height", "branch", "hmax", "hash", "parent_hash", "n_events"
-    )
+    blocks = reorg_blocks(events_df(spark, sf_dir))
     base = fresh_run_dir("reorg")
-    replay, seen, log, cp = (
-        f"{base}/replay",
-        f"{base}/seen",
-        f"{base}/log",
-        f"{base}/cp",
-    )
-    out_cols = ["height", "branch", "hash", "parent_hash", "n_events"]
+    seen, log = f"{base}/seen", f"{base}/log"
     phase1 = blocks.filter(
         ((F.col("branch") == "a") & (F.col("height") <= F.col("hmax") - 3))
         | (F.col("branch") == "b")
@@ -1018,28 +1016,13 @@ def q_stream_reorg(spark: SparkSession, sf_dir: str) -> DataFrame:
     phase2 = blocks.filter(
         (F.col("branch") == "a") & (F.col("height") >= F.col("hmax") - 2)
     )
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        _reorg_step(seen, log, batch_df, batch_id)
-
-    def run_once() -> None:
-        stream = spark.readStream.schema(
-            "height long, branch string, hash string, "
-            "parent_hash string, n_events long"
-        ).parquet(replay)
-        run_foreach_batch(stream, step, cp)
-
-    phase1.select(*out_cols).coalesce(1).write.parquet(replay)
-    run_once()
-    phase2.select(*out_cols).coalesce(1).write.mode("append").parquet(replay)
-    run_once()  # RESTART from the same checkpoint: only phase 2 is new
-    out = spark.read.parquet(log)
-    n_batches = out.select("batch").distinct().count()
-    if n_batches != 2:
-        raise AssertionError(
-            f"restart schedule broken: {n_batches} logged micro-batches"
-        )
-    return out.select(
+    counts = drain_phases(
+        [phase.drop("hmax") for phase in (phase1, phase2)],
+        lambda read: read(),
+        lambda batch_df, batch_id: _reorg_step(seen, log, batch_df, batch_id),
+        base,
+    )
+    return _restart_log(spark, log, counts).select(
         F.col("batch").cast("long").alias("batch_id"),
         "height",
         "hash",
@@ -1089,7 +1072,7 @@ def q_stream_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming twin and the operational loop the reference listener
     runs: watch the feed for missing id ranges, dispatch backfill, and
     watch the holes CLOSE. Two phases with a genuine checkpoint restart
-    (the house recipe): phase 1 streams the holey feed (every 97th id
+    (``drain_phases``): phase 1 streams the holey feed (every 97th id
     missing) — the monitor reports the full gap census; phase 2 streams
     the backfilled ids and resumes from the same checkpoint — the
     monitor reports zero gaps. Each micro-batch re-detects over ALL ids
@@ -1112,12 +1095,7 @@ def q_stream_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = events_df(spark, sf_dir).select("event_id")
     mn, mx = e.agg(F.min("event_id"), F.max("event_id")).collect()[0]
     base = fresh_run_dir("bkf")
-    replay, seen, log, cp = (
-        f"{base}/replay",
-        f"{base}/seen",
-        f"{base}/log",
-        f"{base}/cp",
-    )
+    seen, log = f"{base}/seen", f"{base}/log"
 
     def step(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("overwrite").parquet(f"{seen}/batch={batch_id}")
@@ -1133,22 +1111,15 @@ def q_stream_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         summary.write.mode("overwrite").parquet(f"{log}/batch={batch_id}")
 
-    def run_once() -> None:
-        stream = spark.readStream.schema("event_id long").parquet(replay)
-        run_foreach_batch(stream, step, cp)
-
-    holey = e.filter(F.col("event_id") % _GAP_DROP_MOD != 0)
-    missing = e.filter(F.col("event_id") % _GAP_DROP_MOD == 0)
-    holey.coalesce(1).write.parquet(replay)
-    run_once()
-    missing.coalesce(1).write.mode("append").parquet(replay)
-    run_once()  # RESTART from the same checkpoint: only the backfill is new
-    out = spark.read.parquet(log)
-    n_batches = out.select("batch").distinct().count()
-    if n_batches != 2:
-        raise AssertionError(
-            f"restart schedule broken: {n_batches} logged micro-batches"
-        )
-    return out.select(
+    counts = drain_phases(
+        [
+            e.filter(F.col("event_id") % _GAP_DROP_MOD != 0),
+            e.filter(F.col("event_id") % _GAP_DROP_MOD == 0),
+        ],
+        lambda read: read(),
+        step,
+        base,
+    )
+    return _restart_log(spark, log, counts).select(
         F.col("batch").cast("long").alias("batch_id"), "n_gaps", "n_missing"
     )

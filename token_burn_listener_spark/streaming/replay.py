@@ -23,6 +23,11 @@ backfill, dedup-on-redelivery, an external upsert sink, and a resume cursor
   driver-side, bounded by the source's per-batch rate limit
   (``rows_per_batch``); at scale it is still MERGE-on-key into the
   external store, fenced by batch id.
+- **Crash-and-restart drain** (A8/A9) — ``drain_phases`` appends each
+  phase of a replay as one more file and starts the query again on the
+  same checkpoint, as a listener that is killed and redeployed would be:
+  each restart resumes from the committed offsets and watermark, reads
+  only the new file, and the idempotent sink still holds every row once.
 
 Scale notes (100 TB): the replay dir stands in for Kafka/cloud-log sources;
 ``maxFilesPerTrigger``/``maxOffsetsPerTrigger`` bound per-batch work (A10).
@@ -60,43 +65,30 @@ def events_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "events").select(*EVENT_COLS)
 
 
-def ensure_events_replay(spark: SparkSession, sf_dir: str, dup: bool = False) -> str:
+def ensure_events_replay(
+    spark: SparkSession, sf_dir: str, dup: bool = False, n_files: int = 1
+) -> str:
     """Materialize the events table as a file-stream replay dir.
 
     ``dup=True`` writes every event twice (redelivery fixture for A6 dedup).
-    A single output file keeps availableNow to one deterministic micro-batch.
-    """
-    df = events_df(spark, sf_dir)
-    if dup:
-        df = df.unionAll(df)
-    return materialize(
-        df,
-        scratch_dir(
-            sf_dir,
-            "events_dup" if dup else "events",
-            source=f"{sf_dir}/events.parquet",
-        ),
-        lambda d, p: d.coalesce(1).write.parquet(p),
-    )
-
-
-def ensure_events_replay_multi(
-    spark: SparkSession, sf_dir: str, n_files: int = 4
-) -> str:
-    """Materialize the events table as an ``n_files``-file replay dir.
-
-    The multi-file layout exists for rate-limited ingestion (A10): with
+    One file keeps availableNow to one deterministic micro-batch; the
+    ``n_files``-file layout exists for rate-limited ingestion (A10): with
     ``maxFilesPerTrigger=1`` the file source drains it in ``n_files``
     micro-batches instead of one. Round-robin repartition gives a balanced,
     deterministic-count split (WHICH rows share a file is scan-order
     dependent, so consumers must only assert set/aggregate properties).
     """
+    df = events_df(spark, sf_dir)
+    if dup:
+        df = df.unionAll(df)
+    tag = "events" + ("_dup" if dup else "")
+    tag += f"_x{n_files}" if n_files > 1 else ""
     return materialize(
-        events_df(spark, sf_dir),
-        scratch_dir(
-            sf_dir, f"events_x{n_files}", source=f"{sf_dir}/events.parquet"
-        ),
-        lambda d, p: d.repartition(n_files).write.parquet(p),
+        df,
+        scratch_dir(sf_dir, tag, source=f"{sf_dir}/events.parquet"),
+        lambda d, p: (
+            d.coalesce(1) if n_files == 1 else d.repartition(n_files)
+        ).write.parquet(p),
     )
 
 
@@ -186,3 +178,32 @@ def run_foreach_batch(
     )
     q.awaitTermination()
     return nonempty_batches(q)
+
+
+def drain_phases(
+    phases: list[DataFrame],
+    query: Callable[[Callable[[], DataFrame]], DataFrame],
+    step: Callable[[DataFrame, int], None],
+    base: str,
+) -> list[int]:
+    """Crash-and-restart replay (A8/A9): append each phase to
+    ``base/replay`` as one parquet file, then drain ``query(read)`` through
+    ``step`` on the one checkpoint ``base/cp``. Each phase starts a new
+    query, so every run after the first is a restart that must resume from
+    the committed offsets (and watermark) and read only the new file.
+
+    ``read()`` opens a new file stream over the replay with the phases'
+    schema; a query may call it more than once (two sides of a join).
+    Returns each run's number of non-empty micro-batches.
+    """
+    replay, cp = f"{base}/replay", f"{base}/cp"
+    schema = phases[0].schema
+
+    def read() -> DataFrame:
+        return phases[0].sparkSession.readStream.schema(schema).parquet(replay)
+
+    counts = []
+    for phase in phases:
+        phase.coalesce(1).write.mode("append").parquet(replay)
+        counts.append(run_foreach_batch(query(read), step, cp))
+    return counts

@@ -33,6 +33,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from token_burn_listener_spark.operators.storage import _plan
 from token_burn_listener_spark.registry import QUERIES, load_all_modules
 from token_burn_listener_spark.session import get_spark
 
@@ -374,16 +375,13 @@ def main() -> int:
     # would silently blind the gate. Widen it, and hard-fail below if
     # the gate matched nothing at all (blindness must be loud).
     spark.conf.set("spark.sql.maxMetadataStringLength", "2000")
-    jvm_mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "formatted"
-    )
     problems = []
     total_scan_hits = [0]
     for k in keys:
         try:
-            qe = QUERIES[k](spark, SF_DIR)._jdf.queryExecution()
-            plan = qe.explainString(jvm_mode)
-            opt = str(qe.optimizedPlan())
+            df = QUERIES[k](spark, SF_DIR)
+            plan = _plan(df)
+            opt = str(df._jdf.queryExecution().optimizedPlan())
         except Exception as exc:
             problems.append((k, f"explain failed: {exc}"))
             continue
