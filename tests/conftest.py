@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import os
+import shutil
 import sys
 import uuid
 
@@ -20,6 +21,17 @@ def spark():
     s = get_spark("tests", cpus=8)
     s.sparkContext.setLogLevel("ERROR")
     yield s
+
+
+@pytest.fixture(scope="session", autouse=True)
+def _remove_run_dirs():
+    """The streaming checkpoints and targets the suite wrote go when it ends."""
+    from token_burn_listener_spark import scratch
+
+    yield
+    shutil.rmtree(
+        os.path.join(scratch.SCRATCH_ROOT, scratch.PROCESS_RUNS), ignore_errors=True
+    )
 
 
 @pytest.fixture(scope="session")
@@ -44,5 +56,20 @@ def spark_jobs(spark):
         # the status tracker is fed by the asynchronous listener bus
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
+
+
+@pytest.fixture
+def codegen_compiles(spark):
+    """``codegen_compiles(fn)`` runs ``fn()`` and returns ``(fn's result,
+    number of classes Spark's code generator compiled meanwhile)``."""
+    metric = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = metric.METRIC_COMPILATION_TIME()
+
+    def run(fn):
+        before = compiles.getCount()
+        out = fn()
+        return out, compiles.getCount() - before
 
     return run

@@ -44,9 +44,15 @@ def scratch_dir(sf_dir: str, tag: str, source: str | None = None) -> str:
     return f"{SCRATCH_ROOT}/{h}/{tag}"
 
 
+# This process's run dirs, relative to SCRATCH_ROOT. They share one
+# parent, so a process can remove its own runs (the test session and
+# tools/check_parity.py do when they end) and no other process's.
+PROCESS_RUNS = f"runs/{os.getpid()}-{uuid.uuid4().hex[:6]}"
+
+
 def fresh_run_dir(tag: str) -> str:
     """Unique per-invocation dir for streaming checkpoints/targets."""
-    return f"{SCRATCH_ROOT}/runs/{tag}-{uuid.uuid4().hex[:10]}"
+    return f"{SCRATCH_ROOT}/{PROCESS_RUNS}/{tag}-{uuid.uuid4().hex[:10]}"
 
 
 def materialize(

@@ -113,6 +113,23 @@ def get_spark(
     ``SPARK_GRAFT_CPUS`` (driver contract) controls local parallelism.
     Shuffle partitions and AQE come from ``RUNTIME_CONFS``, which
     ``tables.load_table`` re-applies on every read.
+
+    Spark's cache of Janino-compiled classes holds
+    ``spark.sql.codegen.cache.maxEntries`` entries, 100 by default. The
+    nine ``batch_mix`` keys alone need 172 (generated classes average
+    2,345 bytes of bytecode, p95 7.7 KB), so at 100 the cache evicts in a
+    cycle, no lookup hits, and every pass recompiles ~157 classes (~8-11
+    ms each, then interpreted until the JIT catches up). The conf is
+    static, so it is set here and not in ``RUNTIME_CONFS``. Its value is
+    read once, in ``CodeGenerator``'s static initializer, from the conf
+    of whichever thread touches the code generator first, and a thread
+    with no active session reads Spark's defaults: a Python thread other
+    than the builder that calls ``df.rdd`` (``tables.spread_small_scan``
+    does) plans and compiles outside Spark's active-session scope. So
+    the code generator is touched right here, from the thread that built
+    the session. The driver's vanilla session (``__spark_entry__``)
+    keeps Spark's default of 100 unless its owner sets the conf at
+    launch.
     """
     if cpus is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -123,7 +140,11 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         # Arrow for pandas UDF / toPandas hops (B11 operators).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     for key, value in RUNTIME_CONFS.items():
         builder = builder.config(key, value)
-    return configure(builder.getOrCreate())
+    spark = builder.getOrCreate()
+    codegen = spark._jvm.org.apache.spark.sql.catalyst.expressions.codegen
+    codegen.CodeGenerator.MAX_JVM_METHOD_PARAMS_LENGTH()
+    return configure(spark)

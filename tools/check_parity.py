@@ -28,6 +28,7 @@ canonicalizer cannot sort such cells.
 from __future__ import annotations
 
 import os
+import shutil
 import sys
 import time
 import traceback
@@ -41,6 +42,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as contract
 from pyspark.sql import SparkSession
 
+from token_burn_listener_spark import scratch
 from token_burn_listener_spark.session import get_spark
 from token_burn_listener_spark.tables import TABLE_NAMES
 
@@ -240,4 +242,11 @@ def main() -> int:
 
 
 if __name__ == "__main__":
-    raise SystemExit(main())
+    try:
+        raise SystemExit(main())
+    finally:
+        # the streaming keys' checkpoints and targets of this run
+        shutil.rmtree(
+            os.path.join(scratch.SCRATCH_ROOT, scratch.PROCESS_RUNS),
+            ignore_errors=True,
+        )
