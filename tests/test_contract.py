@@ -237,9 +237,13 @@ def test_load_table_infers_schema_once_per_file_version(
 
 def test_package_code_is_used_by_the_product():
     """Every top-level function or class of the package, other than the
-    @query keys, is referenced (an AST Name, Attribute or import) from
-    the package, __spark_entry__.py or perfbench/ — no package code is
-    kept alive only for tools or tests."""
+    @query keys, is referenced from the package, __spark_entry__.py or
+    perfbench/ — no package code is kept alive only for tools or tests.
+
+    A reference is resolved by module, so a common name (``start``,
+    ``decode``) is not "used" by some other object's method: it counts as
+    a Name in the defining module, an import of the name from that module,
+    or an attribute on a name bound to that module by an import."""
     import ast
     import pathlib
 
@@ -251,6 +255,12 @@ def test_package_code_is_used_by_the_product():
         *(root / "perfbench").rglob("*.py"),
     ]
 
+    def module_of(path: pathlib.Path) -> str:
+        parts = path.relative_to(root).with_suffix("").parts
+        return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+
+    modules = {module_of(p) for p in pkg.rglob("*.py")}
+
     def is_query(dec: ast.expr) -> bool:
         return (
             isinstance(dec, ast.Call)
@@ -258,20 +268,40 @@ def test_package_code_is_used_by_the_product():
             and dec.func.id == "query"
         )
 
+    def dotted(node: ast.expr, bound: dict[str, str]) -> str | None:
+        """The module a Name/Attribute chain names, through ``bound``."""
+        if isinstance(node, ast.Name):
+            return bound.get(node.id)
+        if isinstance(node, ast.Attribute):
+            head = dotted(node.value, bound)
+            return head and f"{head}.{node.attr}"
+        return None
+
     defined: list[tuple[str, str]] = []
-    used: set[str] = set()
+    used: set[tuple[str, str]] = set()
     for path in sources:
         tree = ast.parse(path.read_text(), filename=str(path))
+        here = module_of(path)
+        bound: dict[str, str] = {}  # local name -> the module it is bound to
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                for a in node.names:
+                    local = a.asname or a.name.partition(".")[0]
+                    bound[local] = a.name if a.asname else local
+            elif isinstance(node, ast.ImportFrom) and node.module:
+                for a in node.names:
+                    used.add((node.module, a.name))
+                    bound[a.asname or a.name] = f"{node.module}.{a.name}"
         for node in ast.walk(tree):
             if isinstance(node, ast.Name):
-                used.add(node.id)
+                used.add((here, node.id))
             elif isinstance(node, ast.Attribute):
-                used.add(node.attr)
-            elif isinstance(node, ast.alias):
-                used.add(node.name.rpartition(".")[2])
+                owner = dotted(node.value, bound)
+                if owner in modules:
+                    used.add((owner, node.attr))
         if pkg in path.parents:
             defined += [
-                (str(path.relative_to(root)), node.name)
+                (here, node.name)
                 for node in tree.body
                 if isinstance(
                     node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
@@ -279,5 +309,41 @@ def test_package_code_is_used_by_the_product():
                 and not any(map(is_query, node.decorator_list))
             ]
     assert defined
-    unused = [f"{p}:{name}" for p, name in defined if name not in used]
+    unused = [f"{m}.{name}" for m, name in defined if (m, name) not in used]
     assert not unused, f"package code no product path references: {unused}"
+
+
+def test_perfbench_decode_matches_listener(spark, monkeypatch):
+    """perfbench composes its own listener, and its exactly-once check
+    compares against its own decode: until it calls ``listener``, a drift
+    in the package's decode would go unseen there."""
+    import pathlib
+
+    from token_burn_listener_spark import listener
+    from token_burn_listener_spark.sources.feed import FEED_SCHEMA
+
+    monkeypatch.syspath_prepend(
+        str(pathlib.Path(__file__).resolve().parent.parent / "perfbench")
+    )
+    import gen
+    from workloads import _decode
+
+    assert listener.WATCHED == gen.WATCHED
+    day = 86_400_000_000
+    src = spark.createDataFrame(
+        [
+            (1, 1_700_000_000_123_456, 7, "purchase", 12.3456789),
+            (2, -day - 1, 8, "purchase", None),
+            (3, 0, None, "purchase", -0.0000005),
+            (4, day, 9, "view", 1.5),
+            (5, 3, 10, None, 2.0),
+            (6, 2 * day, 11, "PURCHASE", 4.0),
+            (7, day - 1, 12, "purchase", 2.5e-7),
+        ],
+        FEED_SCHEMA,
+    )
+    ours, theirs = listener.decode(src), _decode(src)
+    assert ours.schema == theirs.schema
+    rows = sorted(ours.collect(), key=lambda r: r.event_id)
+    assert [r.event_id for r in rows] == [1, 2, 3, 7]
+    assert rows == sorted(theirs.collect(), key=lambda r: r.event_id)

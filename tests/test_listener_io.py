@@ -9,13 +9,14 @@
 3. **Upsert sink** — ``batch_upsert_writer``'s single-file, rename-onto
    layout: replay-idempotent, temp files invisible, empty batches typed,
    timestamps exact.
-4. **Checkpoint logs** — a feed → sink query writes its offset and commit
-   logs through the FileSystem-based manager, on a handed-over session
-   too, with a ``.crc`` beside every entry; a temp entry left by a crash
-   before its rename is ignored on restart, a torn or bit-flipped entry
-   fails the restart with a checksum error, and a second run on an active
-   checkpoint stops the first (the one-writer precondition of the
-   manager's exists-then-rename).
+4. **Checkpoint logs** — the listener (``listener.start``/``drain``: feed →
+   decode → sink) writes its offset and commit logs through the
+   FileSystem-based manager, on a handed-over session too, with a
+   ``.crc`` beside every entry; a temp entry left by a crash before its
+   rename is ignored on restart, a torn or bit-flipped entry fails the
+   restart with a checksum error, and a second run on an active checkpoint
+   stops the first (the one-writer precondition of the manager's
+   exists-then-rename).
 """
 
 from __future__ import annotations
@@ -28,15 +29,17 @@ import re
 import struct
 import uuid
 
+import pyarrow as pa
 from pyspark.errors import StreamingQueryException
 import pytest
 
+from token_burn_listener_spark import listener
 from token_burn_listener_spark.session import configure
 from token_burn_listener_spark.sources.feed import (
     _COLS,
     _FeedBatchReader,
     _FeedStreamReader,
-    register_feed_source,
+    _offset,
 )
 from token_burn_listener_spark.streaming.replay import (
     batch_upsert_writer,
@@ -179,6 +182,25 @@ def test_feed_line_count_offset_is_rejected(tmp_path):
         reader.readBetweenOffsets({"pos": 0}, {"pos": 1})
 
 
+def test_feed_malformed_line_names_its_part(tmp_path):
+    bad = [_line(3), "{not json\n", _line(5)]
+    feed = _feed(tmp_path, [_line(i) for i in range(3)], bad)
+    reader = _reader(feed, 3)
+    _, end = reader.read(reader.initialOffset())  # all of part-00000
+    size = len("".join(bad))
+    where = f"{re.escape(feed)}: .* and part-00001.jsonl byte {size}"
+    with pytest.raises(ValueError, match=where) as err:
+        reader.read(end)
+    assert isinstance(err.value.__cause__, pa.ArrowInvalid)
+    with pytest.raises(ValueError, match=where):
+        reader.readBetweenOffsets(end, _offset("part-00001.jsonl", size, 6))
+    batch = _FeedBatchReader({"path": feed, "n_splits": "1"})
+    whole_part = f"part-00001.jsonl byte 0 and part-00001.jsonl byte {size}"
+    with pytest.raises(ValueError, match=whole_part):
+        for p in batch.partitions():
+            list(batch.read(p))
+
+
 def test_feed_batch_ranges_cover_every_line_once(tmp_path):
     # lines of very different lengths, so some ranges hold no line edge
     parts = [
@@ -299,30 +321,6 @@ def test_sink_timestamp_round_trips_exactly(spark, tmp_path):
 _MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
 
 
-def _start(spark, feed: str, target: str, cp: str):
-    register_feed_source(spark)
-    src = (
-        spark.readStream.format("event_feed")
-        .option("path", feed)
-        .option("rows_per_batch", "4")
-        .load()
-    )
-    return (
-        src.writeStream.foreachBatch(batch_upsert_writer(target))
-        .option("checkpointLocation", cp)
-        .start()
-    )
-
-
-def _drain_query(spark, feed: str, target: str, cp: str):
-    q = _start(spark, feed, target, cp)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return q
-
-
 def _log_managers(q) -> list[str]:
     sq = q._jsq.streamingQuery()
     return [
@@ -336,15 +334,20 @@ def _target_ids(spark, target: str) -> list[int]:
     return sorted(r.event_id for r in rows)
 
 
+def _watched(ids) -> list[str]:
+    """Feed lines the listener's decode keeps, one per id."""
+    return [_line(i, event_type=listener.WATCHED) for i in ids]
+
+
 def _append_part(feed: str, k: int, ids) -> None:
     with open(os.path.join(feed, f"part-{k:05d}.jsonl"), "w") as f:
-        f.writelines(_line(i) for i in ids)
+        f.writelines(_watched(ids))
 
 
 def test_checkpoint_logs_use_filesystem_manager_with_crc(spark, tmp_path):
-    feed = _feed(tmp_path, [_line(i) for i in range(10)])
+    feed = _feed(tmp_path, _watched(range(10)))
     target = str(tmp_path / "db")
-    q = _drain_query(spark, feed, target, str(tmp_path / "cp"))
+    q = listener.drain(spark, feed, target, str(tmp_path / "cp"), 4)
     assert _log_managers(q) == ["FileSystemBasedCheckpointFileManager"] * 2
     for log in ("offsets", "commits"):
         names = set(os.listdir(tmp_path / "cp" / log))
@@ -356,7 +359,7 @@ def test_checkpoint_logs_use_filesystem_manager_with_crc(spark, tmp_path):
     try:
         spark.conf.unset(_MANAGER_KEY)
         configure(spark)
-        q = _drain_query(spark, feed, str(tmp_path / "db2"), str(tmp_path / "cp2"))
+        q = listener.drain(spark, feed, str(tmp_path / "db2"), str(tmp_path / "cp2"), 4)
         assert _log_managers(q) == ["FileSystemBasedCheckpointFileManager"] * 2
     finally:
         spark.conf.set(_MANAGER_KEY, saved)
@@ -364,21 +367,21 @@ def test_checkpoint_logs_use_filesystem_manager_with_crc(spark, tmp_path):
 
 
 def test_checkpoint_stray_temp_entry_is_ignored(spark, tmp_path):
-    feed = _feed(tmp_path, [_line(i) for i in range(10)])
+    feed = _feed(tmp_path, _watched(range(10)))
     target, cp = str(tmp_path / "db"), str(tmp_path / "cp")
-    _drain_query(spark, feed, target, cp)
+    listener.drain(spark, feed, target, cp, 4)
     # a crash between writing entry 3 and renaming it into place
     with open(os.path.join(cp, "offsets", f".3.{uuid.uuid4()}.tmp"), "w") as f:
         f.write('v1\n{"batchWatermarkMs":0,"batchTi')
     _append_part(feed, 1, range(10, 16))
-    _drain_query(spark, feed, target, cp)
+    listener.drain(spark, feed, target, cp, 4)
     assert _target_ids(spark, target) == list(range(16))
 
 
 def test_checkpoint_damaged_offset_entry_fails_restart(spark, tmp_path):
-    feed = _feed(tmp_path, [_line(i) for i in range(10)])
+    feed = _feed(tmp_path, _watched(range(10)))
     target, cp = str(tmp_path / "db"), str(tmp_path / "cp")
-    _drain_query(spark, feed, target, cp)
+    listener.drain(spark, feed, target, cp, 4)
     before = sorted(map(tuple, read_upsert_target(spark, target).collect()))
     last = os.path.join(cp, "offsets", "2")
     with open(last, "rb") as f:
@@ -391,31 +394,27 @@ def test_checkpoint_damaged_offset_entry_fails_restart(spark, tmp_path):
     for damaged in (entry[:-3], bytes(flipped)):
         with open(last, "wb") as f:
             f.write(damaged)
-        q = _start(spark, feed, target, cp)
-        try:
-            with pytest.raises(
-                StreamingQueryException, match=r"Checksum error: .*offsets/2"
-            ):
-                q.processAllAvailable()
-        finally:
-            q.stop()
+        with pytest.raises(
+            StreamingQueryException, match=r"Checksum error: .*offsets/2"
+        ):
+            listener.drain(spark, feed, target, cp, 4)
         after = sorted(map(tuple, read_upsert_target(spark, target).collect()))
         assert after == before
     # the failed restarts wrote nothing: the repaired log resumes exactly
     with open(last, "wb") as f:
         f.write(entry)
-    _drain_query(spark, feed, target, cp)
+    listener.drain(spark, feed, target, cp, 4)
     assert _target_ids(spark, target) == list(range(16))
 
 
 def test_checkpoint_second_run_stops_the_first(spark, tmp_path):
-    feed = _feed(tmp_path, [_line(i) for i in range(10)])
+    feed = _feed(tmp_path, _watched(range(10)))
     target, cp = str(tmp_path / "db"), str(tmp_path / "cp")
-    first = _start(spark, feed, target, cp)
+    first = listener.start(spark, feed, target, cp, 4)
     second = None
     try:
         first.processAllAvailable()
-        second = _start(spark, feed, target, cp)
+        second = listener.start(spark, feed, target, cp, 4)
         assert [first.isActive, second.isActive] == [False, True]
         _append_part(feed, 1, range(10, 16))
         second.processAllAvailable()

@@ -46,14 +46,15 @@ def query(key: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     return deco
 
 
-# Operator modules in contract order: the listener source, the streaming
-# queries and the event analytics first, then the batch operators and the
-# LLM-prep surface. ``queries()`` groups keys by this order and keeps source
-# order within a module, so the order follows from the code alone.
+# Operator modules in contract order: the listener source, the listener, the
+# streaming queries and the event analytics first, then the batch operators
+# and the LLM-prep surface. ``queries()`` groups keys by this order and keeps
+# source order within a module, so the order follows from the code alone.
 _MODULES: tuple[str, ...] = tuple(
     f"token_burn_listener_spark.{name}"
     for name in (
         "sources.feed",
+        "listener",
         "streaming.queries",
         "operators.events",
         "operators.scans",

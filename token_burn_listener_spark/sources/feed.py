@@ -1,5 +1,7 @@
 """Custom Python data source: the listener's event-feed subscription
-(SURVEY.md §2.A A1/A8), on Spark 4's Python DataSource API.
+(SURVEY.md §2.A A1/A8), on Spark 4's Python DataSource API. The listener
+itself — this source, the decode and the exactly-once sink on one
+checkpoint — is composed in ``listener.py``.
 
 The reference subscribed to an external event provider over RPC and kept a
 resume cursor so a restart continued from the last delivered event. That
@@ -107,7 +109,9 @@ def _feed_files(path: str) -> list[str]:
     return sorted(glob.glob(os.path.join(path, "part-*")))
 
 
-def _parse(chunks: list[bytes]) -> pa.Table:
+def _parse(
+    chunks: list[bytes], feed: str, start: tuple[str, int], end: tuple[str, int]
+) -> pa.Table:
     """Byte chunks of whole JSON lines as one ``FEED_SCHEMA`` table.
 
     A chunk may end in a part's final line without a newline, so one is
@@ -116,17 +120,29 @@ def _parse(chunks: list[bytes]) -> pa.Table:
     ignored, an integer literal in ``value`` reads as that double, and
     doubles parse bit-exactly. Blank lines hold no row. One block covers
     the whole input, so no line can straddle a block edge.
+
+    The chunks are the bytes of ``feed`` from ``start`` to ``end``, each a
+    ``(part name, byte)``. A malformed line raises a ``ValueError`` naming
+    that range: a restart replays the same range and fails the same way,
+    so the error must say where the line is.
     """
     data = b"".join(c if c.endswith(b"\n") else c + b"\n" for c in chunks)
     if not data.strip():
         return _ARROW_SCHEMA.empty_table()
-    return pa_json.read_json(
-        io.BytesIO(data),
-        read_options=pa_json.ReadOptions(
-            use_threads=False, block_size=min(len(data), 1 << 30)
-        ),
-        parse_options=_PARSE_OPTIONS,
-    ).select(list(_COLS))
+    try:
+        return pa_json.read_json(
+            io.BytesIO(data),
+            read_options=pa_json.ReadOptions(
+                use_threads=False, block_size=min(len(data), 1 << 30)
+            ),
+            parse_options=_PARSE_OPTIONS,
+        ).select(list(_COLS))
+    except pa.ArrowInvalid as e:
+        first = start[0] or "the first part"
+        raise ValueError(
+            f"event_feed {feed}: malformed line between {first} byte {start[1]}"
+            f" and {end[0]} byte {end[1]} (its rows count from 0 there): {e}"
+        ) from e
 
 
 def _read_range(file: str, start: int, end: int) -> bytes:
@@ -195,8 +211,10 @@ class _FeedBatchReader(DataSourceReader):
     def read(self, partition: _ByteRange):
         if partition is None:  # fenced EMPTY feed: partitions() was []
             return
-        data = _read_range(partition.file, partition.start, partition.end)
-        yield from _parse([data]).to_batches()
+        file, start, end = partition.file, partition.start, partition.end
+        name = os.path.basename(file)
+        data = _read_range(file, start, end)
+        yield from _parse([data], self.path, (name, start), (name, end)).to_batches()
 
 
 def _offset(part: str, byte: int, pos: int) -> dict:
@@ -229,7 +247,7 @@ class _FeedStreamReader(SimpleDataSourceStreamReader):
 
     def read(self, start):
         part, byte, pos = _cursor(start)
-        chunks, n = [], 0
+        begin, chunks, n = (part, byte), [], 0
         for file in _feed_files(self.path):
             name = os.path.basename(file)
             if name < part:  # already delivered: never reopened
@@ -244,7 +262,7 @@ class _FeedStreamReader(SimpleDataSourceStreamReader):
                 part, byte = name, first + len(data)
         if not chunks:
             return iter([]), start
-        table = _parse(chunks)
+        table = _parse(chunks, self.path, begin, (part, byte))
         return iter(table.to_batches()), _offset(part, byte, pos + table.num_rows)
 
     def readBetweenOffsets(self, start, end):
@@ -262,7 +280,7 @@ class _FeedStreamReader(SimpleDataSourceStreamReader):
                         e_byte if name == e_part else os.path.getsize(file),
                     )
                 )
-        table = _parse(chunks)
+        table = _parse(chunks, self.path, (s_part, s_byte), (e_part, e_byte))
         if table.num_rows != e_pos - s_pos:
             raise ValueError(
                 f"event_feed replay of {json.dumps(start)} .. {json.dumps(end)}"
@@ -410,7 +428,7 @@ class EventFeedDataSource(DataSource):
         return _FeedWriter(self.options, overwrite)
 
 
-def _feed_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
+def feed_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The events fixture in the feed's row shape (``FEED_SCHEMA``)."""
     return load_table(spark, sf_dir, "events").select(
         "event_id",
@@ -428,7 +446,7 @@ def ensure_feed(spark: SparkSession, sf_dir: str) -> str:
     the reader refuses, out of use."""
     register_feed_source(spark)
     return materialize(
-        _feed_rows(spark, sf_dir),
+        feed_rows(spark, sf_dir),
         scratch_dir(
             sf_dir, "events_feed_v2", source=f"{sf_dir}/events.parquet"
         ),
@@ -537,7 +555,7 @@ def q_src_python_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     target = fresh_run_dir("feed_sink")
     os.makedirs(target, exist_ok=True)
     (
-        _feed_rows(spark, sf_dir)
+        feed_rows(spark, sf_dir)
         .repartition(4)
         .write.format("event_feed")
         .option("path", target)
@@ -548,84 +566,3 @@ def q_src_python_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise AssertionError("sink commit fence missing: no _FEEDCOMMIT")
     return spark.read.format("event_feed").option("path", target).load()
 
-
-@query(
-    "q_stream_listener_e2e",
-    oracle="""
-    SELECT event_id, user_id AS burner, round(value, 6) AS amount,
-           epoch_us(ts) // 86400000000 AS burn_day
-    FROM events WHERE event_type = 'purchase'
-    """,
-)
-def q_stream_listener_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REFERENCE-PARITY FLAGSHIP: the listener's whole job as one pipeline —
-    subscription (custom Python streaming source with a resume cursor) →
-    decode + event filter (the ABI-subscription analog: only the watched
-    event type) → exactly-once upsert into the external-DB stand-in —
-    SURVIVING a mid-backfill crash/restart. Phase 1 delivers half the feed
-    and stops; phase 2 appends the rest and restarts from the same
-    checkpoint; the oracle then asserts the DB holds every watched event
-    exactly once with exact decoded values — cursor resume, no loss, no
-    double-delivery.
-
-    100 TB plan: the source is the ingest boundary (Kafka/cloud-log JVM
-    connectors at scale — this proves the offset/commit contract); the
-    decode/filter is map-only relational; the sink's per-epoch file,
-    replaced by an atomic rename, is the idempotent foreachBatch shape, so
-    a replayed epoch lands on the same path instead of duplicating.
-    """
-    from token_burn_listener_spark.scratch import fresh_run_dir
-    from token_burn_listener_spark.streaming.replay import (
-        batch_upsert_writer,
-        read_upsert_target,
-    )
-
-    register_feed_source(spark)
-    base = fresh_run_dir("listener_e2e")
-    feed, target, cp = f"{base}/feed", f"{base}/db", f"{base}/cp"
-    ev = _feed_rows(spark, sf_dir)
-    n_events = ev.count()
-
-    # phase 0: half the feed arrives, the listener drains it, then "crashes";
-    # phase 1: the rest arrives, and a NEW query on the SAME checkpoint
-    # resumes from the committed cursor and must deliver ONLY the new lines.
-    # Each phase publishes through the feed's own sink: its parts appear
-    # all-or-nothing after the existing ones, fenced by _FEEDCOMMIT (the
-    # provider's commit marker).
-    for phase in (0, 1):
-        (
-            ev.filter(F.col("event_id") % 2 == phase)
-            .write.format("event_feed")
-            .option("path", feed)
-            .mode("append")
-            .save()
-        )
-        src = (
-            spark.readStream.format("event_feed")
-            .option("path", feed)
-            .option("rows_per_batch", str(max(1, n_events // 6)))
-            .load()
-        )
-        decoded = src.filter(F.col("event_type") == "purchase").select(
-            "event_id",
-            F.col("user_id").alias("burner"),
-            F.round("value", 6).alias("amount"),
-            F.expr("ts_us div 86400000000").alias("burn_day"),
-        )
-        q = (
-            decoded.writeStream.foreachBatch(batch_upsert_writer(target))
-            .outputMode("append")
-            .option("checkpointLocation", cp)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    out = read_upsert_target(spark, target)
-    n_out, n_distinct = out.count(), out.select("event_id").distinct().count()
-    if n_out != n_distinct:
-        raise AssertionError(
-            f"double delivery after restart: {n_out} rows, {n_distinct} ids"
-        )
-    return out
